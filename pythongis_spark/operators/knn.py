@@ -7,21 +7,37 @@ reference sort is unstable on ties; we document the divergence and break
 ties deterministically by ``(dist, right_id)`` (SURVEY.md §7 build plan
 item 5).
 
-Physical plan (scales to 10^12 probe rows):
+Physical plan — ``knn_join`` takes one of two paths:
 
-1. targets are cell-indexed at a level chosen from their count, then
-   exploded to the neighbor cells within a Chebyshev ring R (build-side
-   explosion ~ (2R+1)^2, bounded);
-2. probe points keep their single pure-Catalyst cell → equi-join;
-3. ``row_number() over (partition by left id order by dist, right_id) <= k``;
-4. correctness guard: a row's k-th distance must not exceed the distance
-   to the ring boundary (otherwise a nearer target could sit outside the
-   ring). Rows failing the guard — and rows with < k matches — fall back
-   to an exact broadcast cross-join, which only ever sees a tiny remnant.
+* **Arrow kernel** (planar metric, targets within
+  ``broadcast_targets_rows``): the targets are collected once, sorted by
+  id and bucketed into a CSR cell index (cell-sorted permutation plus
+  the offsets of each occupied cell) at the level where a cell holds
+  ≈ k targets. One ``mapInPandas`` pass over the points ranks each
+  point's ring-window targets with numpy, accepts it when its k-th
+  distance is inside the ring-boundary guard, widens the ring for the
+  rest and ends in an all-targets pass — no join, no window, no
+  exchange of the points.
+  ``dist`` is evaluated in the Catalyst expression's IEEE operation
+  order, so values are bit-identical to the JVM path.
+* **JVM cell join** (trig metrics, or targets over the budget): targets
+  are exploded to the neighbor cells within a Chebyshev ring R and
+  equi-joined to the probe's single codegen cell id; a per-point window
+  keeps ``row_number() over (partition by left id order by dist,
+  right_id) <= k`` and flags rows whose k-th distance passes the same
+  guard. Each round is checkpointed once; the points that fail re-join
+  at 2R, and the last remnant falls back to an exact cross join. Trig
+  stays on the JVM because numpy libm can differ from it in the last
+  ulp, which would break bit-parity with the SQL oracles.
+
+Correctness guard (both paths): a row's k-th distance must be below the
+distance to its ring window's boundary, otherwise a nearer target could
+sit outside the window.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -181,11 +197,16 @@ def knn_join(
     Reference analog: ``spatial_join(condition='distance', n=k)``
     (``pythongis/vector/manager.py:293-296,345-355``); divergence: ties.
 
+    Planar calls whose targets fit ``broadcast_targets_rows`` run the
+    Arrow kernel (:func:`_knn_arrow`); trig metrics and larger target
+    sets run the JVM cell join. Both emit ``min(k, targets)`` rows per
+    point with bit-identical ``dist`` values.
+
     ``point_cols`` (r6, guide §4.1): restrict the point-side columns in
     the RESULT to this list (coordinates are still used internally).
-    Catalyst prunes the JVM paths on its own, but the tiny-target Arrow
-    stage is opaque — without the hint every point column is serialized
-    back from Python k times per point. Result rows are identical to
+    Catalyst prunes the JVM paths on its own, but the Arrow stage is
+    opaque — without the hint every point column is serialized back
+    from Python k times per point. Result rows are identical to
     selecting the same columns afterwards.
     """
     # planning statistic: an explicit hint avoids a count job per call
@@ -200,126 +221,262 @@ def knn_join(
     pts = points.filter(F.col(lon).isNotNull() & F.col(lat).isNotNull())
 
     def _restrict(out: DataFrame) -> DataFrame:
+        out = out.withColumnRenamed("_tid", target_id)
         if point_cols is None:
             return out
         return out.select(*point_cols, target_id, "dist", "knn_rank")
 
-    # tiny-table shortcut on an ABSOLUTE bound only: cross-join work is
-    # O(points × targets), so tying this to broadcast_targets_rows (a
-    # broadcast-SIZE knob) silently turned a raised broadcast budget into
-    # a billion-row cartesian at scale (found by the sf0.1 sweep)
-    if n_targets <= max(k * 4, 1000):
-        if n_targets and metric == "planar":
-            # tiny PLANAR target table: vectorized Arrow top-k — no
-            # crossJoin materialization and no per-point window shuffle
-            # (the crossJoin plan shuffled |points|×|targets| rows)
-            return _restrict(
-                _knn_tiny_arrow(
-                    pts, tgt, k, point_id, lon, lat, out_cols=point_cols
-                ).withColumnRenamed("_tid", target_id)
-            )
-        # tiny target table, trig metrics: exact broadcast cross join
-        # (JVM trig keeps bit-parity with the SQL oracles; numpy libm
-        # sin/cos can differ in the last ulp)
+    if metric == "planar" and n_targets <= broadcast_targets_rows:
         return _restrict(
-            _knn_bruteforce(
-                pts, tgt, k, point_id, lon, lat, metric, n_targets
-            ).withColumnRenamed("_tid", target_id)
+            _knn_arrow(pts, tgt, k, point_id, lon, lat, z, ring,
+                       max_fallback_rounds, out_cols=point_cols)
+        )
+    # tiny target table, trig metrics: exact broadcast cross join. The
+    # bound is ABSOLUTE: cross-join work is O(points × targets), so tying
+    # it to broadcast_targets_rows (a broadcast-SIZE knob) silently turned
+    # a raised budget into a billion-row cartesian at scale (sf0.1 sweep)
+    if n_targets <= max(k * 4, 1000):
+        return _restrict(
+            _knn_bruteforce(pts, tgt, k, point_id, lon, lat, metric, n_targets)
         )
 
     if z is None:
         z = _pick_target_level(n_targets, k)
 
-    result = None
+    rounds = []
     pending = pts
     cur_ring = ring
-    for _ in range(max_fallback_rounds):
-        if z <= 0:
-            break
+    by_pt = Window.partitionBy(point_id)
+    for _ in range(max_fallback_rounds if z > 0 else 0):
         exploded = _explode_neighbor_cells(tgt, "_tlon", "_tlat", z, cur_ring)
         if n_targets * (2 * cur_ring + 1) ** 2 <= broadcast_targets_rows:
             exploded = F.broadcast(exploded)
         probe = pending.withColumn(
             "cell", IU.point_cell_expr(F.col(lon), F.col(lat), z)
         )
-        cand = probe.join(exploded, "cell", "inner").withColumn(
+        # left join: a point with no target in its window keeps one null
+        # row, so the round's checkpoint holds every pending point
+        cand = probe.join(exploded, "cell", "left").withColumn(
             "dist",
             _dist_expr(F.col(lon), F.col(lat), F.col("_tlon"), F.col("_tlat"), metric),
         )
-        w = Window.partitionBy(point_id).orderBy("dist", "_tid")
-        topk = cand.withColumn("knn_rank", F.row_number().over(w)).filter(
-            F.col("knn_rank") <= k
-        )
+        topk = cand.withColumn(
+            "knn_rank", F.row_number().over(by_pt.orderBy("dist", "_tid"))
+        ).filter(F.col("knn_rank") <= k)
         guard = _boundary_guard_expr(F.col(lon), F.col(lat), z, cur_ring, metric)
-        stats = topk.groupBy(point_id).agg(
-            F.count("*").alias("_nm"), F.max("dist").alias("_kd")
+        ok = (F.count("_tid").over(by_pt) >= k) & (F.max("dist").over(by_pt) < guard)
+        # one eager checkpoint per round: both the accepted rows and the
+        # next round's remnant read it, so the join and window run once
+        # (without the lineage cut each round's plan embeds the previous
+        # rounds several times and Spark recomputes them combinatorially)
+        flagged = topk.withColumn(
+            "_ok", F.coalesce(ok, F.lit(False))
+        ).localCheckpoint(eager=True)
+        rounds.append(
+            flagged.filter(F.col("_ok")).drop("_ok", "cell", "_tlon", "_tlat")
         )
-        topk = topk.join(stats, point_id)
-        ok = topk.filter((F.col("_nm") >= k) & (F.col("_kd") < guard)).drop(
-            "_nm", "_kd", "cell", "_tlon", "_tlat"
+        pending = flagged.filter(~F.col("_ok") & (F.col("knn_rank") == 1)).select(
+            *pts.columns
         )
-        result = ok if result is None else result.unionByName(ok)
-        ok_ids = ok.select(point_id).distinct()
-        # cut lineage + materialize the (small) remnant: without this,
-        # each fallback round's pending embeds the whole previous round's
-        # plan MULTIPLE times (anti-join probe + next candidates + final
-        # union), and Spark recomputes the chain combinatorially — at
-        # sf0.1 the 3-round plan ran for minutes and OOMed the JVM
-        pending = pending.join(ok_ids, point_id, "left_anti").localCheckpoint(
-            eager=True
-        )
-        if pending.limit(1).count() == 0:
+        if pending.isEmpty():
             pending = None
             break
         cur_ring *= 2
-    if pending is not None and pending.limit(1).count() > 0:
+    if pending is not None:
         # the remnant set is tiny, but the TARGET side here is the full
         # table — only broadcast it when it's genuinely small, else use a
         # partition-pair cartesian (pending has few partitions, so task
         # count stays ~|target partitions|; no 8 GB broadcast cap risk)
-        bf = _knn_bruteforce(
+        rounds.append(_knn_bruteforce(
             pending, tgt, k, point_id, lon, lat, metric, n_targets,
             allow_broadcast=n_targets <= broadcast_targets_rows,
+        ))
+    return _restrict(functools.reduce(DataFrame.unionByName, rounds))
+
+
+# Element budget of one distance matrix in the Arrow kernel (1M doubles
+# = 8 MB): bounds worker memory on wide rings and all-targets passes
+# whatever the batch or target-set size.
+_KERNEL_ELEMS = 1 << 20
+
+
+def _cell_xy(lon: np.ndarray, lat: np.ndarray, n: int):
+    """Clipped tile column/row at n × n cells — the floor/clip formulas
+    of ``point_cell_expr`` and ``_explode_neighbor_cells`` in numpy
+    (NaN lands in cell 0; its guard never passes)."""
+    tx = np.nan_to_num(np.floor((lon + 180.0) / 360.0 * n))
+    ty = np.nan_to_num(np.floor((90.0 - lat) / 180.0 * n))
+    return (np.clip(tx, 0, n - 1).astype(np.int64),
+            np.clip(ty, 0, n - 1).astype(np.int64))
+
+
+def _planar_guard(px: np.ndarray, py: np.ndarray, n: int, ring: int) -> np.ndarray:
+    """:func:`_boundary_guard_expr` (planar) in numpy, same IEEE order."""
+    cw, ch = 360.0 / n, 180.0 / n
+    tx = np.floor((px + 180.0) / 360.0 * n)
+    ty = np.floor((90.0 - py) / 180.0 * n)
+    d_n = np.where(ty - ring <= 0, np.inf, (90.0 - (ty - ring) * ch) - py)
+    d_s = np.where(ty + ring >= n - 1, np.inf, py - (90.0 - (ty + ring + 1) * ch))
+    g = np.minimum(d_n, d_s)
+    if 2 * ring + 1 < n:
+        d_w = px - (-180.0 + (tx - ring) * cw)
+        d_e = (-180.0 + (tx + ring + 1) * cw) - px
+        g = np.minimum(g, np.minimum(d_w, d_e))
+    return g
+
+
+def _planar_dist(px, py, tx, ty):
+    """sqrt(dx*dx + dy*dy) in the operation order of :func:`_dist_expr`
+    (each step correctly rounded, so bits match the JVM), in place."""
+    dx = px - tx
+    dy = py - ty
+    np.multiply(dx, dx, out=dx)
+    np.multiply(dy, dy, out=dy)
+    np.add(dx, dy, out=dx)
+    return np.sqrt(dx, out=dx)
+
+
+def _topk(d: np.ndarray, kk: int, j: np.ndarray | None = None):
+    """Top-kk of each row of a (rows × candidates) distance matrix,
+    ordered by (dist, target position) like the window's
+    ``orderBy(dist, _tid)`` (targets are indexed in id order).
+
+    ``j`` holds each entry's target position (−1 marks padding); None
+    means the column index. An O(width) partition per row finds the
+    kk-th distance, and only the entries not beyond it are sorted (a
+    stable lexsort). Ranking uses the post-sqrt value: two distinct d²
+    can round to one sqrt, and such pairs tie. Returns (rows with ≥ kk
+    candidates, their kk positions, their kk dists)."""
+    kth = np.partition(d, kk - 1, axis=1)[:, kk - 1:kk] if kk < d.shape[1] else np.inf
+    r, c = np.nonzero(~(d > kth))
+    if j is None:
+        jj = c
+    else:
+        jj = j[r, c]
+        real = jj >= 0
+        r, c, jj = r[real], c[real], jj[real]
+    dd = d[r, c]
+    order = np.lexsort((jj, dd, r))
+    cnt = np.bincount(r, minlength=len(d))
+    full = cnt >= kk
+    at = order[((np.cumsum(cnt) - cnt)[full][:, None] + np.arange(kk)).ravel()]
+    return full, jj[at].reshape(-1, kk), dd[at].reshape(-1, kk)
+
+
+def _chunks(widths: np.ndarray):
+    """[a, b) row ranges over non-decreasing row widths whose padded
+    matrix (rows × widest row) stays within ``_KERNEL_ELEMS`` (a wider
+    single row gets a range of its own)."""
+    a = 0
+    while a < len(widths):
+        lim = min(len(widths), a + max(1, _KERNEL_ELEMS // max(int(widths[a]), 1)))
+        size = np.arange(1, lim - a + 1) * widths[a:lim]
+        b = a + max(1, int(np.searchsorted(size, _KERNEL_ELEMS, side="right")))
+        yield a, b
+        a = b
+
+
+class _CellIndex:
+    """CSR index of the targets at level z: targets sorted by id, then a
+    cell-sorted permutation ``perm`` with the start and length of every
+    occupied cell (sorted cell ids, so any level fits in O(targets))."""
+
+    def __init__(self, tx: np.ndarray, ty: np.ndarray, z: int):
+        self.tx, self.ty, self.z = tx, ty, z
+        # coordinates with a trailing +inf pad, read by position -1
+        self.txp, self.typ = np.append(tx, np.inf), np.append(ty, np.inf)
+        n = 1 << z
+        cx, cy = _cell_xy(tx, ty, n)
+        cell = cy * n + cx
+        self.perm = np.argsort(cell, kind="stable")
+        self.cells, self.start, self.count = np.unique(
+            cell[self.perm], return_index=True, return_counts=True
         )
-        result = bf if result is None else result.unionByName(bf)
-    return _restrict(result.withColumnRenamed("_tid", target_id))
+
+    def window(self, cx, cy, ring: int):
+        """(start, count) per (point, window cell) of the ring window —
+        the target cells whose neighbor explosion reaches the point's
+        cell: x wraps (span capped at the world), y clips at the poles."""
+        n = 1 << self.z
+        span, west = min(2 * ring + 1, n), min(ring, n // 2)
+        cols = (cx[:, None] + (west - np.arange(span))) % n
+        rows = cy[:, None] + np.arange(-ring, ring + 1)
+        cell = (rows[:, :, None] * n + cols[:, None, :]).reshape(len(cx), -1)
+        i = np.searchsorted(self.cells, cell).clip(max=len(self.cells) - 1)
+        on_grid = np.repeat((rows >= 0) & (rows < n), span, axis=1)
+        cnt = np.where(on_grid & (self.cells[i] == cell), self.count[i], 0)
+        return self.start[i], cnt
+
+    def ring_pass(self, px, py, ring: int, kk: int):
+        """Rank each point's ring-window targets; accept a point when it
+        has ≥ kk of them and its kk-th distance is below the guard.
+        Returns (accepted point positions, their kk positions, dists)."""
+        n = 1 << self.z
+        cx, cy = _cell_xy(px, py, n)
+        step = max(1, _KERNEL_ELEMS // (min(2 * ring + 1, n) * (2 * ring + 1)))
+        out = []
+        for a in range(0, len(px), step):  # bounds the (points × cells) tables
+            start, cnt = self.window(cx[a:a + step], cy[a:a + step], ring)
+            tot = cnt.sum(axis=1)
+            by = np.argsort(tot, kind="stable")  # like-sized windows pad little
+            for b, e in _chunks(tot[by]):
+                rows, w = by[b:e], tot[by[e - 1]]
+                lo, ln = start[rows].ravel(), cnt[rows].ravel()
+                flat = np.arange(ln.sum())
+                # (rows × w) target positions, -1 padded (→ the +inf pad)
+                jm = np.full((e - b, w), -1)
+                jm[np.repeat(np.arange(e - b), tot[rows]),
+                   flat - np.repeat(np.cumsum(tot[rows]) - tot[rows], tot[rows])
+                   ] = self.perm[np.repeat(lo - (np.cumsum(ln) - ln), ln) + flat]
+                pt = a + rows
+                d = _planar_dist(px[pt, None], py[pt, None], self.txp[jm], self.typ[jm])
+                full, jk, dk = _topk(d, kk, jm)
+                pt = pt[full]
+                ok = dk[:, -1] < _planar_guard(px[pt], py[pt], n, ring)
+                out.append((pt[ok], jk[ok], dk[ok]))
+        return tuple(map(np.concatenate, zip(*out)))
+
+    def all_pass(self, px, py, kk: int):
+        """Exact top-kk against every target: dense (chunk × targets)
+        distance matrices, ranked by :func:`_topk`."""
+        jj, dd = [], []
+        for a, b in _chunks(np.full(len(px), len(self.tx))):
+            d = _planar_dist(px[a:b, None], py[a:b, None], self.tx, self.ty)
+            _, jk, dk = _topk(d, kk)
+            jj.append(jk)
+            dd.append(dk)
+        return np.concatenate(jj), np.concatenate(dd)
 
 
-def _knn_tiny_arrow(pts: DataFrame, tgt: DataFrame, k: int,
-                    point_id: str, lon: str, lat: str,
-                    out_cols: list[str] | None = None) -> DataFrame:
-    """Exact planar kNN against a tiny target set as ONE mapInPandas
-    pass: per Arrow batch, a (B × T) numpy distance matrix and a stable
-    argsort emit exactly k rows per point — no join, no exchange.
+def _knn_arrow(pts: DataFrame, tgt: DataFrame, k: int, point_id: str,
+               lon: str, lat: str, z: int | None, ring: int, rounds: int,
+               out_cols: list[str] | None = None) -> DataFrame:
+    """Exact planar kNN as ONE mapInPandas pass over the points against
+    a broadcast :class:`_CellIndex` of the targets.
 
-    Bit-parity contract: dist = sqrt(dx*dx + dy*dy) evaluated in the
-    same IEEE operation order as the Catalyst expression in
-    :func:`_dist_expr` (multiply/add/sqrt are all correctly rounded),
-    so values hash identically under the driver's oracle gate. Ties
-    break by (dist, target id): targets are pre-sorted by id, and the
-    stable argsort preserves that order among equal distances —
-    the same (dist, _tid) order the window path uses. (Ranking must use
-    the POST-sqrt value: two distinct d² can round to one sqrt, and such
-    pairs are ties that break by _tid — an argsort on d² would order
-    them by d² instead.)
+    Per Arrow batch: rank the ring window (:meth:`_CellIndex.ring_pass`)
+    with the same rounds, ring doubling and guard as the JVM join, then
+    rank every target for the points still failing
+    (:meth:`_CellIndex.all_pass`) — exact by definition. Targets with a
+    null coordinate have no distance and are skipped.
 
-    r6 perf (guide §4.2, §2.2): build the exploded output from
-    numpy ``np.repeat`` columns instead of a pandas ``.loc`` row
-    replication (~3× less per-batch overhead); and when the probe scan
-    has fewer partitions than the cluster's parallelism (single-row-
-    group local parquet), hash-repartition it so the Python stage runs
-    on every core — scale-adaptive: a real many-row-group table skips
-    the exchange entirely."""
+    Output columns are built by numpy gathers; ``out_cols`` limits the
+    point columns serialized back (the stage is opaque to Catalyst's
+    pruning); and when the probe scan has fewer
+    partitions than the cluster's parallelism (single-row-group local
+    parquet), it is hash-repartitioned so the Python stage runs on every
+    core — a real many-row-group table skips the exchange."""
     from pyspark.sql import types as T
 
-    rows = sorted(tgt.collect(), key=lambda r: r["_tid"])
-    tids = np.array([r["_tid"] for r in rows])
-    tx = np.array([r["_tlon"] for r in rows], dtype=np.float64)
-    ty = np.array([r["_tlat"] for r in rows], dtype=np.float64)
+    tdf = tgt.toPandas()
+    tdf = tdf[tdf["_tlon"].notna() & tdf["_tlat"].notna()]
+    tdf = tdf.sort_values("_tid", kind="stable")
+    tids = tdf["_tid"].to_numpy()
     kk = min(k, len(tids))
-    # out_cols: only the listed point columns are serialized back from
-    # Python (k copies per point) — the stage is opaque to Catalyst's
-    # column pruning, so the caller's hint is the only way to shed them
+    index = _CellIndex(
+        tdf["_tlon"].to_numpy(np.float64), tdf["_tlat"].to_numpy(np.float64),
+        _pick_target_level(len(tids), k) if z is None else z,
+    )
     keep = list(pts.columns) if out_cols is None else list(out_cols)
     out_schema = T.StructType(
         [pts.schema[c] for c in keep]
@@ -330,33 +487,35 @@ def _knn_tiny_arrow(pts: DataFrame, tgt: DataFrame, k: int,
         ]
     )
 
-    spark = pts.sparkSession
-    par = spark.sparkContext.defaultParallelism
+    par = pts.sparkSession.sparkContext.defaultParallelism
     if not pts.isStreaming and pts.rdd.getNumPartitions() < par:
         pts = pts.repartition(par, F.col(point_id))
 
     def gen(batches):
         ranks = np.arange(1, kk + 1, dtype=np.int32)
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0 or kk == 0:
                 continue
             px = pdf[lon].to_numpy(np.float64)
             py = pdf[lat].to_numpy(np.float64)
-            # in-place chain (bit-identical values, ~half the memory
-            # traffic — this op is bandwidth-bound on wide hosts):
-            # dx←dx², dy←dy², dx←dx²+dy², dx←sqrt(·)
-            dx = px[:, None] - tx[None, :]
-            dy = py[:, None] - ty[None, :]
-            np.multiply(dx, dx, out=dx)
-            np.multiply(dy, dy, out=dy)
-            np.add(dx, dy, out=dx)
-            d = np.sqrt(dx, out=dx)
-            idx = np.argsort(d, axis=1, kind="stable")[:, :kk]
-            cols = {c: np.repeat(pdf[c].to_numpy(), kk) for c in keep}
-            cols["_tid"] = tids[idx].ravel()
-            cols["dist"] = np.take_along_axis(d, idx, axis=1).ravel()
-            cols["knn_rank"] = np.tile(ranks, n)
+            todo = np.arange(len(pdf))
+            found = []  # (point rows, kk target positions, kk dists)
+            r = ring
+            for _ in range(rounds if index.z > 0 else 0):
+                hit, jk, dk = index.ring_pass(px[todo], py[todo], r, kk)
+                found.append((todo[hit], jk, dk))
+                todo = np.delete(todo, hit)
+                if len(todo) == 0:
+                    break
+                r *= 2
+            if len(todo):
+                found.append((todo, *index.all_pass(px[todo], py[todo], kk)))
+            at, jk, dk = map(np.concatenate, zip(*found))
+            at = np.repeat(at, kk)
+            cols = {c: pdf[c].to_numpy()[at] for c in keep}
+            cols["_tid"] = tids[jk.ravel()]
+            cols["dist"] = dk.ravel()
+            cols["knn_rank"] = np.tile(ranks, len(at) // kk)
             yield pd.DataFrame(cols)
 
     return pts.mapInPandas(gen, out_schema)

@@ -55,6 +55,16 @@ def test_images_df_deterministic(spark):
     assert a.equals(b)  # partitioning-independent generation
 
 
+def test_noise_images_df_partition_independent(spark):
+    def table(**kw):
+        df = FX.noise_images_df(spark, 60, dup_every=10, **kw).toPandas()
+        return df.sort_values("image_id").reset_index(drop=True)
+
+    a, b = table(), table(partitions=7)
+    assert len(a) == 66  # 60 images + a planted duplicate of every 10th
+    assert a.equals(b)
+
+
 def test_verify_images_all_pass(spark):
     imgs = FX.images_df(spark, 60)
     v = verify_images(imgs).toPandas()

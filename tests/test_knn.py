@@ -212,3 +212,136 @@ def test_knn_point_cols_restriction_identical(spark, small):
     a = sorted(map(tuple, full.select("p_id", "t_id", "dist", "knn_rank").collect()))
     b = sorted(map(tuple, narrow.collect()))
     assert a == b
+
+
+def _parity_case(name):
+    """(points, targets) of one Arrow-kernel vs JVM-join parity case.
+    Every target set exceeds the 1000-row brute-force shortcut, so the
+    forced JVM call runs the grid rounds."""
+    rng = np.random.Generator(np.random.PCG64(sum(map(ord, name))))
+    if name == "hot_cell":
+        pts = _mkpoints(400, 21, "p")
+        hot = pts.index < 200
+        pts.loc[hot, "lon"] = 10.0 + rng.random(200)
+        pts.loc[hot, "lat"] = 50.0 + rng.random(200)
+        tgt = _mkpoints(2500, 22, "t")
+        tgt.loc[:99, "lon"] = 10.0 + rng.random(100)
+        tgt.loc[:99, "lat"] = 50.0 + rng.random(100)
+    elif name == "antimeridian":
+        pts, tgt = _mkpoints(300, 23, "p"), _mkpoints(1500, 24, "t")
+        for df in (pts, tgt):
+            df["lon"] = rng.uniform(170.0, 190.0, len(df))
+            df["lon"] = df["lon"].where(df["lon"] <= 180.0, df["lon"] - 360.0)
+        pts.loc[:3, "lon"] = [-180.0, 180.0, -179.999, 179.999]
+    elif name == "polar":
+        pts, tgt = _mk_extreme(300, 25, "p"), _mk_extreme(1500, 26, "t")
+        pts.loc[:3, "lat"] = [90.0, -90.0, 89.999, -89.999]
+        tgt.loc[:1, "lat"] = [90.0, -90.0]
+    elif name == "duplicate_targets":
+        pts = _mkpoints(300, 27, "p")
+        # coarse lattice: many locations hold several target ids, and
+        # ids run opposite to row order, so ties must break by id
+        tgt = pd.DataFrame({
+            "t_id": np.arange(3000, dtype=np.int64)[::-1].copy(),
+            "lon": rng.integers(-40, 40, 3000) * 4.0,
+            "lat": rng.integers(-15, 15, 3000) * 4.0,
+        })
+    else:  # corner_targets: most points' rings stay empty → all-targets pass
+        pts, tgt = _mkpoints(300, 28, "p"), _mkpoints(1500, 29, "t")
+        tgt["lon"] = rng.uniform(175.0, 180.0, len(tgt))
+        tgt["lat"] = rng.uniform(85.0, 90.0, len(tgt))
+    return pts, tgt
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "case", ["hot_cell", "antimeridian", "polar", "duplicate_targets", "corner_targets"]
+)
+def test_knn_arrow_kernel_matches_jvm_join(spark, case):
+    """The planar Arrow kernel and the JVM cell join (forced by a target
+    budget below the target count) return the same target ids and ranks
+    and bit-identical distances."""
+    pts, tgt = _parity_case(case)
+    spts, stgt = spark.createDataFrame(pts), spark.createDataFrame(tgt)
+    kw = dict(point_id="p_id", target_id="t_id")
+    arrow = knn_join(spts, stgt, 3, **kw)
+    jvm = knn_join(spts, stgt, 3, broadcast_targets_rows=len(tgt) - 1, **kw)
+    assert "MapInPandas" in _plan(arrow) and "MapInPandas" not in _plan(jvm)
+    cols = ["p_id", "knn_rank", "t_id", "dist"]
+    a, b = (
+        df.select(*cols).toPandas().sort_values(cols[:2]).reset_index(drop=True)
+        for df in (arrow, jvm)
+    )
+    assert len(a) == 3 * len(pts)
+    assert a[cols[:3]].equals(b[cols[:3]])
+    assert np.array_equal(a["dist"].to_numpy().view(np.int64),
+                          b["dist"].to_numpy().view(np.int64))
+
+
+def test_knn_haversine_over_1000_targets_uses_jvm_join(spark, big_targets, monkeypatch):
+    """Trig metrics stay on the JVM join above the brute-force shortcut:
+    each grid round plans a per-point Window (seen in the plan the round
+    checkpoints) and no Python stage."""
+    spts, stgt, _, _ = big_targets
+    few = stgt.filter(F.col("t_id") < 1500)
+    checkpointed = []
+    cls = type(spts)
+    real = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(_plan(self))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    got = knn_join(spts, few, 2, point_id="p_id", target_id="t_id",
+                   metric="haversine", target_rows=1500)
+    assert got.count() == 2 * 400
+    assert checkpointed and all("Window" in p for p in checkpointed)
+    assert not any("MapInPandas" in p for p in checkpointed + [_plan(got)])
+
+
+def test_knn_arrow_zero_targets_empty(spark, small):
+    spts, stgt, _, _ = small
+    got = knn_join(spts, stgt.filter(F.lit(False)), 3, point_id="p_id",
+                   target_id="t_id", point_cols=["p_id"])
+    assert got.columns == ["p_id", "t_id", "dist", "knn_rank"]
+    assert got.count() == 0
+
+
+def test_knn_kernel_budget_chunks_match_loop_reference(monkeypatch):
+    """The Arrow kernel's passes give the same top-k whether the element
+    budget splits them into many padded chunks or none, and the
+    all-targets pass equals a per-point loop (ties by target position)."""
+    from pythongis_spark.operators import knn as K
+
+    rng = np.random.Generator(np.random.PCG64(31))
+    # coarse lattice targets: many exact duplicate locations → ties
+    tx = rng.integers(-20, 20, 600) * 9.0
+    ty = rng.integers(-10, 10, 600) * 9.0
+    px, py = rng.uniform(-180, 180, 250), rng.uniform(-90, 90, 250)
+    px[:3], py[:3] = [180.0, -180.0, 0.0], [90.0, -90.0, np.nan]
+    index = K._CellIndex(tx, ty, 3)
+
+    def passes():
+        ok, j, d = index.ring_pass(px, py, 1, 4)
+        o = np.argsort(ok)  # accepted points come back in chunk order
+        return (ok[o], j[o], d[o]), index.all_pass(px, py, 4)
+
+    (ok1, j1, d1), (ja, da) = passes()
+    monkeypatch.setattr(K, "_KERNEL_ELEMS", 50)
+    (ok2, j2, d2), (jb, db) = passes()
+    assert 0 < len(ok1) < len(px)
+    assert np.array_equal(ok1, ok2) and np.array_equal(j1, j2)
+    assert np.array_equal(d1, d2, equal_nan=True)
+    assert np.array_equal(ja, jb) and np.array_equal(da, db, equal_nan=True)
+    for i in range(len(px)):
+        dx, dy = px[i] - tx, py[i] - ty
+        d = np.sqrt(dx * dx + dy * dy)
+        want = np.lexsort((np.arange(len(tx)), d))[:4]
+        assert np.array_equal(ja[i], want)
+        assert np.array_equal(da[i], d[want], equal_nan=True)
+    # an accepted ring-pass point has its exact top-k
+    assert np.array_equal(j1, ja[ok1]) and np.array_equal(d1, da[ok1])

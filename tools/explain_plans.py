@@ -159,8 +159,8 @@ def main():
         must_not=[r"Generate explode", r"ArrowEvalPython"],
     )
 
-    # 10. tiny-target planar kNN: one MapInPandas top-k pass — no
-    # crossJoin materialization, no per-point window shuffle (r4 path)
+    # 10. planar kNN against the 60 zone centers: one MapInPandas top-k
+    # pass — no crossJoin materialization, no per-point window shuffle
     kq = E.queries()["knn_zone_centers"](spark, sf)
     plan = fmt(kq)
     failures += not check(
@@ -168,6 +168,18 @@ def main():
         plan,
         must=[r"MapInPandas"],
         must_not=[r"CartesianProduct", r"Window"],
+    )
+
+    # 10b. planar kNN above the brute-force shortcut but within the
+    # broadcast budget: the same single MapInPandas pass over a broadcast
+    # cell index — no neighbor-cell explode, window or cross join
+    kg = E.queries()["knn_grid_path"](spark, sf)
+    plan = fmt(kg)
+    failures += not check(
+        "knn_grid_path",
+        plan,
+        must=[r"MapInPandas"],
+        must_not=[r"Window", r"Generate explode", r"CartesianProduct"],
     )
 
     # 11. deterministic hash sampling: a pure codegen filter over the
