@@ -296,32 +296,6 @@ def clear_plan_stats() -> None:
         _BUILD_CACHE.clear()
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate of a frame (driver-side, no job). Unknown
-    → +inf-ish so the caller treats it as big (the safe direction at
-    scale: a wrongly-skipped repartition costs a single-task stage, a
-    wrongly-added one costs a bounded exchange)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 1 << 62
-
-
-def _repart_min_bytes(spark) -> int:
-    """Byte floor enabling the parallelism-guard repartition, conf
-    `pythongis.repartition.minBytes`. Default −1 = guard fully OFF
-    (not even plan introspection, which itself costs 150-300 ms of
-    driver time per call on the probe plans — measured). Deployments
-    whose inputs can produce large single-split scans set a floor
-    (e.g. 64 MiB): scans estimated above it with fewer partitions than
-    defaultParallelism get hash-repartitioned before the broadcast
-    join."""
-    try:
-        return int(spark.conf.get("pythongis.repartition.minBytes", "-1"))
-    except Exception:
-        return -1
-
-
 def _prefix(df: DataFrame, prefix: str, exclude=()) -> DataFrame:
     for c in df.columns:
         if c not in exclude:
@@ -454,34 +428,6 @@ def point_in_polygon_join(
         )
     if build_count <= broadcast_rows:
         build = _cached_build(("build", _sem_key(polys_n), z), _make_build, polys_n)
-        # r6 scale-adaptive parallelism guard (guide §2.2): a broadcast
-        # join keeps the probe's own partitioning, so a probe scanned
-        # from fewer splits than the cluster has cores (single-row-group
-        # parquet) runs the join + downstream partial aggs on those few
-        # tasks. Opt-in via conf `pythongis.repartition.minBytes` ≥ 0:
-        # hash-repartition the probe when (a) its scan has fewer
-        # partitions than defaultParallelism and (b) the optimizer size
-        # estimate clears the floor. A/B measurements shaped this twice:
-        # with a materializing sink the repartition wins big (6.0→2.3 s
-        # at sf1.0, noop sink), but with count-style sinks the exchange
-        # is a net LOSS at ≤15 MB scans (1.10→1.64 s) — AND the guard's
-        # own plan introspection (optimizedPlan stats / .rdd) costs
-        # 150-300 ms of driver time per call on this host, so the
-        # DEFAULT is fully off (no introspection at all) and deployments
-        # with pathological big single-split scans opt in with a byte
-        # floor. The checks run against the cheap pre-cell `points`
-        # frame (same partitioning as the probe; the quadkey cell
-        # expression makes the probe's own tree ~2× dearer to analyze).
-        spark_s = points.sparkSession
-        min_bytes = _repart_min_bytes(spark_s)
-        par = spark_s.sparkContext.defaultParallelism
-        if (
-            min_bytes >= 0
-            and not probe.isStreaming  # .rdd is illegal on streaming frames
-            and _plan_size_bytes(points) >= min_bytes
-            and points.rdd.getNumPartitions() < par
-        ):
-            probe = probe.repartition(par, F.col(pid))
         cand = probe.join(F.broadcast(build), "cell", "inner")
     else:
         probe_s, build_s, keys = _salt_plan(

@@ -57,9 +57,10 @@ def _grid_bbox(g, rd: RasterDef):
     coords = W.all_coords(g)
     xmin, ymin = coords[:, 0].min(), coords[:, 1].min()
     xmax, ymax = coords[:, 0].max(), coords[:, 1].max()
-    x0 = max(0, int(np.floor((xmin - rd.xoffset) / rd.xscale)))
-    x1 = min(rd.width - 1, int(np.floor((xmax - rd.xoffset) / rd.xscale)))
-    # yscale negative: ymax maps to smaller y index
+    # a negative scale maps the max coordinate to the smaller index
+    xa = int(np.floor((xmin - rd.xoffset) / rd.xscale))
+    xb = int(np.floor((xmax - rd.xoffset) / rd.xscale))
+    x0, x1 = max(0, min(xa, xb)), min(rd.width - 1, max(xa, xb))
     ya = int(np.floor((ymax - rd.yoffset) / rd.yscale))
     yb = int(np.floor((ymin - rd.yoffset) / rd.yscale))
     y0, y1 = max(0, min(ya, yb)), min(rd.height - 1, max(ya, yb))
@@ -121,74 +122,127 @@ def _cover_weights_udf(rd: RasterDef):
     return coverw
 
 
+# element budget of one (rows × edges) crossing matrix or one block of
+# line-distance cell centres: the size of one partial-cover window
+# (DEFAULT_COVER_CELL_CAP), so no feature allocates more than that
+_SCAN_BLOCK_ELEMS = 1 << 18
+
+
+def _polygon_intervals(g, gx: np.ndarray, gy: np.ndarray):
+    """Scanline form of the even-odd centre rule (Raptor, VLDB 2019).
+
+    For every row centre ``gy[r]`` the ring edges passing the half-open
+    test of ``G.points_in_ring`` give crossings ``xint`` (same expression
+    and operation order, so the same doubles); ``searchsorted(gx, xint,
+    'left')`` counts the centres with ``gx < xint``. A centre is inside
+    iff an odd number of crossings lie right of it, so the sorted cuts
+    pair up as ``[c0, c1), [c2, c3), …`` — the parity of the summed
+    crossings equals ``points_in_polygon``'s XOR over rings. ``gx`` must
+    be ascending. Returns (row index, first column, end column) arrays
+    with end exclusive and every interval non-empty."""
+    rings = W.iter_rings(g)
+    a = np.concatenate([r[:-1] for r in rings])
+    b = np.concatenate([r[1:] for r in rings])
+    ax0, ay0, ax1, ay1 = a[:, 0], a[:, 1], b[:, 0], b[:, 1]
+    step = max(1, _SCAN_BLOCK_ELEMS // max(len(ax0), 1))
+    rows, starts, ends = [], [], []
+    for r0 in range(0, len(gy), step):
+        pyc = gy[r0 : r0 + step, None]
+        ri, ei = np.nonzero((ay0 > pyc) != (ay1 > pyc))
+        py = pyc[ri, 0]
+        e0, e1 = ay0[ei], ay1[ei]
+        xint = ax0[ei] + (py - e0) / (e1 - e0) * (ax1[ei] - ax0[ei])
+        cut = np.searchsorted(gx, xint, "left")
+        # an unclosed ring can leave a row with an odd count: centres
+        # left of every crossing are then inside, i.e. a cut at 0
+        odd = np.flatnonzero(np.bincount(ri, minlength=len(pyc)) % 2)
+        ri = np.concatenate([ri, odd])
+        cut = np.concatenate([cut, np.zeros(len(odd), cut.dtype)])
+        order = np.lexsort((cut, ri))
+        pairs = cut[order].reshape(-1, 2)
+        keep = pairs[:, 1] > pairs[:, 0]
+        rows.append(r0 + ri[order][0::2][keep])
+        starts.append(pairs[keep, 0])
+        ends.append(pairs[keep, 1])
+    return np.concatenate(rows), np.concatenate(starts), np.concatenate(ends)
+
+
+def _line_intervals(g, rd: RasterDef, gx: np.ndarray, gy: np.ndarray):
+    """Cells whose centre lies within half a cell width of a line, as
+    run-length (row, first column, end column) arrays, end exclusive —
+    evaluated over blocks of rows under ``_SCAN_BLOCK_ELEMS``."""
+    nx = len(gx)
+    step = max(1, _SCAN_BLOCK_ELEMS // nx)
+    rows, starts, ends = [], [], []
+    for r0 in range(0, len(gy), step):
+        my, mx = np.meshgrid(gy[r0 : r0 + step], gx, indexing="ij")
+        d = G.points_to_geom_dist(mx.ravel(), my.ravel(), g)
+        inside = (d <= 0.5 * abs(rd.xscale)).reshape(mx.shape)
+        edge = np.diff(np.pad(inside.astype(np.int8), ((0, 0), (1, 1))), axis=1)
+        rs, cs = np.nonzero(edge == 1)
+        _, ce = np.nonzero(edge == -1)
+        rows.append(r0 + rs)
+        starts.append(cs)
+        ends.append(ce)
+    return np.concatenate(rows), np.concatenate(starts), np.concatenate(ends)
+
+
+def _cover_intervals(g, rd: RasterDef):
+    """Covered cells of one decoded geometry as grid-row x-intervals:
+    (y, x0, x1) int arrays, x1 inclusive. See ``_cover_cells_udf`` for
+    the cover rule."""
+    if g[0] in ("Point", "MultiPoint"):
+        coords = W.all_coords(g)
+        cx = np.floor((coords[:, 0] - rd.xoffset) / rd.xscale).astype(int)
+        cy = np.floor((coords[:, 1] - rd.yoffset) / rd.yscale).astype(int)
+        keep = (cx >= 0) & (cx < rd.width) & (cy >= 0) & (cy < rd.height)
+        return cy[keep], cx[keep], cx[keep]
+    bb = _grid_bbox(g, rd)
+    if bb is None:
+        empty = np.zeros(0, dtype=int)
+        return empty, empty, empty
+    x0, x1, y0, y1 = bb
+    gx = rd.xoffset + (np.arange(x0, x1 + 1) + 0.5) * rd.xscale
+    gy = rd.yoffset + (np.arange(y0, y1 + 1) + 0.5) * rd.yscale
+    if g[0] not in ("Polygon", "MultiPolygon"):
+        r, s, e = _line_intervals(g, rd, gx, gy)
+        return y0 + r, x0 + s, x0 + e - 1
+    if rd.xscale > 0:
+        r, s, e = _polygon_intervals(g, gx, gy)
+        return y0 + r, x0 + s, x0 + e - 1
+    # descending centres: scan the reversed row, then map the column
+    # range [s, e) of the reversal back to [x1 - e + 1, x1 - s]
+    r, s, e = _polygon_intervals(g, gx[::-1], gy)
+    return y0 + r, x1 - e + 1, x1 - s
+
+
 def _cover_cells_udf(rd: RasterDef):
-    """pandas UDF: (geometry WKB, window bounds) → array of covered
-    (x, y) cell structs.
+    """pandas UDF: geometry WKB → array of covered-cell runs
+    ``(y, x0, x1)``, one per grid row a feature covers contiguously
+    (x1 inclusive); ``cover_cells`` expands them in Catalyst.
 
     Cover rule: a cell is covered iff its *center* is inside the polygon
     (or it contains the point / a line passes within half a cell) —
     matching the practical effect of the reference's PIL paint fill
     (``pythongis/raster/manager.py:815-869``); exact PIL scanline parity
-    is not reproduced (documented divergence). Cell membership is
-    evaluated independently per center, so restricting to a window
-    (``_window_split`` giant-feature guard) is exact.
+    is not reproduced (documented divergence). Polygons are scanned row
+    by row (``_polygon_intervals``), so per-feature output is
+    O(rows crossed), not O(cells), and no giant-feature window split is
+    needed. Each point yields one single-cell run; duplicates stay.
     """
 
-    @F.pandas_udf("array<struct<x:int,y:int>>")
-    def cover(geom: pd.Series, wx0: pd.Series, wx1: pd.Series,
-              wy0: pd.Series, wy1: pd.Series) -> pd.Series:
+    @F.pandas_udf("array<struct<y:int,x0:int,x1:int>>")
+    def cover(geom: pd.Series) -> pd.Series:
         out = []
-        for i, blob in enumerate(geom.to_numpy(object)):
+        for blob in geom.to_numpy(object):
             if blob is None:
                 out.append(None)
                 continue
-            g = W.decode_wkb(bytes(blob))
-            t = g[0]
-            win = _window_bounds(wx0, wx1, wy0, wy1, i)
-            if t in ("Point", "MultiPoint"):
-                coords = W.all_coords(g)
-                cx = np.floor((coords[:, 0] - rd.xoffset) / rd.xscale).astype(int)
-                cy = np.floor((coords[:, 1] - rd.yoffset) / rd.yscale).astype(int)
-                keep = (cx >= 0) & (cx < rd.width) & (cy >= 0) & (cy < rd.height)
-                if win is not None:
-                    keep &= (cx >= win[0]) & (cx <= win[1])
-                    keep &= (cy >= win[2]) & (cy <= win[3])
-                out.append(
-                    [{"x": a, "y": b}
-                     for a, b in zip(cx[keep].tolist(), cy[keep].tolist())]
-                )
-                continue
-            bb = _grid_bbox(g, rd)
-            if bb is None:
-                out.append([])
-                continue
-            x0, x1, y0, y1 = bb
-            if win is not None:
-                x0, x1 = max(x0, win[0]), min(x1, win[1])
-                y0, y1 = max(y0, win[2]), min(y1, win[3])
-            if x1 < x0 or y1 < y0:
-                out.append([])
-                continue
-            xs = np.arange(x0, x1 + 1)
-            ys = np.arange(y0, y1 + 1)
-            gx = rd.xoffset + (xs + 0.5) * rd.xscale
-            gy = rd.yoffset + (ys + 0.5) * rd.yscale
-            mx, my = np.meshgrid(gx, gy, indexing="ij")
-            if t in ("Polygon", "MultiPolygon"):
-                inside = G.points_in_polygon(mx.ravel(), my.ravel(), g)
-            else:  # lines: within half a cell diagonal of the line
-                d = G.points_to_geom_dist(mx.ravel(), my.ravel(), g)
-                inside = d <= 0.5 * abs(rd.xscale)
-            cxs, cys = np.meshgrid(xs, ys, indexing="ij")
-            # .tolist() yields python ints in bulk — ~4× faster than a
-            # per-element int() cast for big cover sets (r6, guide §4.2)
+            y, x0, x1 = _cover_intervals(W.decode_wkb(bytes(blob)), rd)
             out.append(
                 [
-                    {"x": a, "y": b}
-                    for a, b in zip(
-                        cxs.ravel()[inside].tolist(),
-                        cys.ravel()[inside].tolist(),
-                    )
+                    {"y": a, "x0": b, "x1": c}
+                    for a, b, c in zip(y.tolist(), x0.tolist(), x1.tolist())
                 ]
             )
         return pd.Series(out, index=geom.index)
@@ -199,7 +253,7 @@ def _cover_cells_udf(rd: RasterDef):
 def _bbox_struct_udf(rd: RasterDef):
     """pandas UDF: geometry WKB → clamped cell-bbox struct (null when
     the geometry misses the grid) — the cheap sizing pass feeding
-    ``_window_split``."""
+    ``_window_split`` (``partial`` cover only)."""
 
     @F.pandas_udf("struct<x0:int,x1:int,y0:int,y1:int>")
     def bbox(geom: pd.Series) -> pd.DataFrame:
@@ -221,9 +275,10 @@ def _bbox_struct_udf(rd: RasterDef):
 def _window_split(vector: DataFrame, rd: RasterDef, geom: str,
                   cell_cap: int) -> DataFrame:
     """Explode each feature into (feature × tile-window) rows so no
-    single cover-UDF invocation evaluates more than ~``cell_cap`` cells
-    — the giant-feature guard (same failure mode ``spatial_join``'s
-    ``cell_cap`` nested-loop split fixes, ``spatial_join.py:253``).
+    single ``partial`` cover-UDF invocation evaluates more than
+    ~``cell_cap`` cells — the giant-feature guard (same failure mode
+    ``spatial_join``'s ``cell_cap`` nested-loop split fixes,
+    ``spatial_join.py:253``).
     Windows partition the feature's cell bbox, so the union of windowed
     cover sets equals the unwindowed cover set with no duplicates.
     Adds columns ``_wx0.._wy1`` (window bounds) and drops features that
@@ -255,10 +310,25 @@ def cover_cells(vector: DataFrame, rd: RasterDef, geom: str = "geom",
                 partial: bool = False,
                 cell_cap: int = DEFAULT_COVER_CELL_CAP) -> DataFrame:
     """Feature → covered-cell rows: all of ``vector``'s columns (minus
-    the geometry) plus ``x``, ``y`` (and ``w`` when ``partial``), with
-    the giant-feature window split applied. This is the shared front end
-    of rasterize / zonal_statistics / disperse."""
-    udf = _cover_weights_udf(rd) if partial else _cover_cells_udf(rd)
+    the geometry) plus ``x``, ``y`` (and ``w`` when ``partial``). This is
+    the shared front end of rasterize / zonal_statistics / disperse.
+
+    Centre rule: one Python pass returns each feature's grid-row runs
+    ``(y, x0, x1)``; Catalyst expands them with
+    ``explode(sequence(x0, x1))``, at most one grid row of cells per
+    run, so no feature is ever materialized as per-cell Python objects.
+    ``partial``: per-cell fractional weights cannot be runs, so the
+    giant-feature window split (``cell_cap``) bounds each UDF row
+    instead."""
+    keep = [F.col(c) for c in vector.columns if c != geom]
+    if not partial:
+        runs = vector.withColumn("_iv", F.explode(_cover_cells_udf(rd)(F.col(geom))))
+        return runs.select(
+            *keep,
+            F.explode(F.sequence(F.col("_iv.x0"), F.col("_iv.x1"))).alias("x"),
+            F.col("_iv.y").alias("y"),
+        )
+    udf = _cover_weights_udf(rd)
     if rd.width * rd.height <= cell_cap:
         # no feature can exceed the cap on this grid — skip the split
         # stage entirely (its extra ArrowEvalPython pass costs real wall
@@ -272,13 +342,10 @@ def cover_cells(vector: DataFrame, rd: RasterDef, geom: str = "geom",
             F.col(geom), F.col("_wx0"), F.col("_wx1"), F.col("_wy0"), F.col("_wy1")
         )
         exploded = split.withColumn("_cov", F.explode(cov))
-    keep = [c for c in vector.columns if c != geom]
-    cols = [F.col(c) for c in keep] + [
-        F.col("_cov.x").alias("x"), F.col("_cov.y").alias("y")
-    ]
-    if partial:
-        cols.append(F.col("_cov.w").alias("w"))
-    return exploded.select(*cols)
+    return exploded.select(
+        *keep, F.col("_cov.x").alias("x"), F.col("_cov.y").alias("y"),
+        F.col("_cov.w").alias("w"),
+    )
 
 
 def rasterize(
@@ -294,8 +361,9 @@ def rasterize(
     """Burn vector features into the grid
     (``pythongis/raster/manager.py:790-974``).
 
-    Physical plan: explode features → covered cells (pandas UDF) →
-    per-cell aggregate. ``stat='last'`` reproduces the reference's paint
+    Physical plan: one ArrowEvalPython (the cover UDF: per-feature
+    grid-row runs) → ``Generate explode(sequence(x0, x1))`` into cells
+    in Catalyst → per-cell aggregate.``stat='last'`` reproduces the reference's paint
     order (last feature wins) using ``order_col`` as paint sequence;
     other stats (sum/mean/count/min/max/majority/minority) match the
     valuekey+stat mode (``manager.py:933-972``).

@@ -171,10 +171,11 @@ def test_distance_raster_anisotropic(spark):
 
 
 def test_giant_feature_window_split(spark):
-    """A polygon covering the whole grid must be split into tile windows
-    before the cover UDF — no single UDF row may evaluate the full grid
-    (the 100TB giant-feature guard). Results must equal the unsplit
-    cover set."""
+    """A polygon covering the whole grid: the partial cover must be split
+    into tile windows before its UDF — no single UDF row may evaluate the
+    full grid (the 100TB giant-feature guard) — while the centre-rule
+    cover emits at most one run per grid row and needs no split. Both
+    must give every cell exactly once."""
     import numpy as np
     from pythongis_spark.geometry import wkb as W
     from pythongis_spark.raster import zonal as Z
@@ -192,7 +193,7 @@ def test_giant_feature_window_split(spark):
     split = Z._window_split(df, rd, "geom", cell_cap=1024)  # tile=32
     n_windows = split.count()
     assert n_windows == (360 // 32 + (360 % 32 > 0)) * (180 // 32 + (180 % 32 > 0))
-    # windowed cover == full grid, no dups
+    # centre-rule cover (row runs, no window split) == full grid, no dups
     cells = Z.cover_cells(df, rd, "geom", cell_cap=1024)
     assert cells.count() == 360 * 180
     assert cells.select("x", "y").distinct().count() == 360 * 180
@@ -218,3 +219,211 @@ def test_window_split_small_feature_single_window(spark):
     )
     assert Z._window_split(df, rd, "geom", Z.DEFAULT_COVER_CELL_CAP).count() == 1
     assert Z.cover_cells(df, rd, "geom").count() == 100
+
+
+# ------------------------------------------------------------------
+# centre-rule cover as grid-row runs: parity with the per-cell rule
+# ------------------------------------------------------------------
+
+def _closed(*pts):
+    a = np.array(pts, float)
+    return np.vstack([a, a[:1]])
+
+
+# every input lies in the world box [0, 10]², which each affine below maps
+# onto its 10 × 10 grid; cell centres sit on the .5 lattice
+PARITY_GEOMS = {
+    "hole": W.wkb_polygon(
+        _closed((0.2, 0.2), (9.3, 0.2), (9.3, 9.1), (0.2, 9.1)),
+        [_closed((3.1, 3.2), (6.6, 3.2), (6.6, 6.7), (3.1, 6.7))],
+    ),
+    "multipolygon": W.wkb_multipolygon([
+        (_closed((0.4, 0.6), (4.3, 1.1), (2.2, 4.8)), []),
+        (_closed((5.1, 5.3), (9.7, 6.2), (7.4, 9.6)), []),
+    ]),
+    # concave: the rows between the arms hold two runs
+    "u_shape": W.wkb_polygon(
+        _closed((1, 1), (9, 1), (9, 9), (7, 9), (7, 3), (3, 3), (3, 9), (1, 9))
+    ),
+    # horizontal edge exactly on the centre row y = 5.5
+    "centre_row_edge": W.wkb_polygon(
+        _closed((1.2, 5.5), (8.8, 5.5), (7.1, 8.3), (2.2, 8.9))
+    ),
+    # vertices on a cell centre (2.5, 1.5) and on the centre row y = 5.5
+    "centre_vertex": W.wkb_polygon(
+        _closed((2.5, 1.5), (8.3, 5.5), (5.5, 9.2), (0.9, 5.5))
+    ),
+    # vertical edges on the centre columns x = 1.5 and x = 6.5
+    "centre_column_edges": W.wkb_polygon(
+        _closed((1.5, 2.2), (6.5, 2.2), (6.5, 7.8), (1.5, 7.8))
+    ),
+    # unclosed ring: rows crossed an odd number of times
+    "unclosed": W.wkb_polygon(np.array([[1.2, 1.3], [8.7, 2.1], [6.3, 9.4]])),
+    "line": W.wkb_linestring(np.array([[0.3, 0.4], [9.6, 7.7], [4.4, 9.8]])),
+    # centres exactly half a cell from the line (dyadic, so exact)
+    "line_half_cell": W.wkb_linestring(np.array([[0.0, 5.0], [8.0, 5.0]])),
+    # two points in one cell, one outside the grid
+    "multipoint": W.wkb_multipoint([(2.2, 2.3), (2.7, 2.9), (8.1, 0.6), (12.0, 3.0)]),
+}
+
+
+def _per_cell_cover(g, rd):
+    """The per-cell centre rule: every bbox cell centre tested on its own."""
+    from collections import Counter
+
+    from pythongis_spark.raster import zonal as Z
+
+    if g[0] in ("Point", "MultiPoint"):
+        c = W.all_coords(g)
+        cx = np.floor((c[:, 0] - rd.xoffset) / rd.xscale).astype(int)
+        cy = np.floor((c[:, 1] - rd.yoffset) / rd.yscale).astype(int)
+        k = (cx >= 0) & (cx < rd.width) & (cy >= 0) & (cy < rd.height)
+        return Counter(zip(cx[k].tolist(), cy[k].tolist()))
+    x0, x1, y0, y1 = Z._grid_bbox(g, rd)
+    xs, ys = np.meshgrid(np.arange(x0, x1 + 1), np.arange(y0, y1 + 1))
+    xs, ys = xs.ravel(), ys.ravel()
+    px = rd.xoffset + (xs + 0.5) * rd.xscale
+    py = rd.yoffset + (ys + 0.5) * rd.yscale
+    if g[0] in ("Polygon", "MultiPolygon"):
+        inside = G.points_in_polygon(px, py, g)
+    else:
+        inside = G.points_to_geom_dist(px, py, g) <= 0.5 * abs(rd.xscale)
+    return Counter(zip(xs[inside].tolist(), ys[inside].tolist()))
+
+
+@pytest.mark.parametrize(
+    "affine",
+    [
+        (1.0, 0.0, 0.0, 0.0, -1.0, 10.0),   # north-up
+        (-1.0, 0.0, 10.0, 0.0, -1.0, 10.0),  # xscale < 0: descending centres
+        (1.0, 0.0, 0.0, 0.0, 1.0, 0.0),     # yscale > 0
+    ],
+    ids=["north_up", "xscale_neg", "yscale_pos"],
+)
+def test_cover_cells_matches_per_cell_rule(spark, affine):
+    from collections import Counter
+
+    from pythongis_spark.raster.zonal import cover_cells
+
+    rd = RasterDef(10, 10, affine)
+    names = list(PARITY_GEOMS)
+    df = spark.createDataFrame(
+        pd.DataFrame({"fid": range(len(names)), "geom": list(PARITY_GEOMS.values())})
+    )
+    got = {n: Counter() for n in names}
+    for r in cover_cells(df, rd).collect():
+        got[names[r["fid"]]][(r["x"], r["y"])] += 1
+    for n in names:
+        want = _per_cell_cover(W.decode_wkb(PARITY_GEOMS[n]), rd)
+        assert want, n
+        assert got[n] == want, n
+    assert 2 in got["multipoint"].values()  # duplicates stay duplicates
+
+
+def test_cover_runs_split_concave_rows():
+    from pythongis_spark.raster.zonal import _cover_intervals
+
+    y, x0, x1 = _cover_intervals(W.decode_wkb(PARITY_GEOMS["u_shape"]), RD)
+    rows, n_runs = np.unique(y, return_counts=True)
+    assert n_runs.max() == 2 and n_runs.min() == 1
+    assert (x1 >= x0).all()
+
+
+def test_cover_runs_row_blocks_do_not_change_result(monkeypatch):
+    # a tiny element budget forces one block per row (polygons) and per
+    # few rows (lines); the runs must not change
+    from pythongis_spark.raster import zonal as Z
+
+    full = {n: Z._cover_intervals(W.decode_wkb(b), RD) for n, b in PARITY_GEOMS.items()}
+    monkeypatch.setattr(Z, "_SCAN_BLOCK_ELEMS", 3)
+    for n, b in PARITY_GEOMS.items():
+        got = Z._cover_intervals(W.decode_wkb(b), RD)
+        for a, e in zip(got, full[n]):
+            np.testing.assert_array_equal(np.sort(a), np.sort(e), err_msg=n)
+
+
+# ------------------------------------------------------------------
+# zonal_statistics zone-cell cache (_ZCELLS_CACHE)
+# ------------------------------------------------------------------
+
+@pytest.fixture
+def zcache(monkeypatch):
+    import collections
+
+    from pythongis_spark.raster import zonal as Z
+
+    cache = collections.OrderedDict()
+    monkeypatch.setattr(Z, "_ZCELLS_CACHE", cache)
+    yield cache
+    for _, frame, _ in cache.values():
+        frame.unpersist()
+
+
+def _zone_layer(spark, x0):
+    return spark.createDataFrame(
+        pd.DataFrame({"zone_id": [x0], "geom": [_rect(x0, 0, x0 + 3, 3)]})
+    )
+
+
+def _value_cells(spark):
+    return spark.createDataFrame(
+        [(x, y, 0, float(10 * x + y)) for x in range(10) for y in range(10)],
+        "x INT, y INT, band INT, val DOUBLE",
+    )
+
+
+def _zone_sum(x0):
+    # _rect(x0, 0, x0 + 3, 3) covers columns x0..x0+2, rows 7..9 of RD
+    return float(sum(10 * x + y for x in range(x0, x0 + 3) for y in range(7, 10)))
+
+
+def test_zone_cell_cache_hit_reuses_frame_and_count(spark, zcache, monkeypatch):
+    from pythongis_spark.raster import zonal as Z
+
+    zones, cells = _zone_layer(spark, 0), _value_cells(spark)
+    first = Z.zonal_statistics(zones, cells, RD, stats=["count", "sum"]).collect()
+    [(key, (_, frame, n_cells))] = zcache.items()
+    assert n_cells == 9
+    counted = []
+    orig = type(frame).count
+    monkeypatch.setattr(type(frame), "count", lambda df: counted.append(df) or orig(df))
+    again = Z.zonal_statistics(zones, cells, RD, stats=["count", "sum"])
+    assert counted == []  # the memoized count: no sizing job on a hit
+    assert list(zcache) == [key] and zcache[key][1] is frame
+    assert sorted(again.collect()) == sorted(first)
+    assert first[0]["count"] == 9 and first[0]["sum"] == _zone_sum(0)
+
+
+def test_zone_cell_cache_collision_persists_afresh(spark, zcache, monkeypatch):
+    from pythongis_spark.raster import zonal as Z
+
+    a, b, cells = _zone_layer(spark, 0), _zone_layer(spark, 5), _value_cells(spark)
+    # every plan hashes alike: only sameSemantics tells the layers apart
+    monkeypatch.setattr(type(a), "semanticHash", lambda df: 0)
+    Z.zonal_statistics(a, cells, RD, stats=["count", "sum"])
+    displaced = zcache[0][1]
+    assert displaced.is_cached
+    out = Z.zonal_statistics(b, cells, RD, stats=["count", "sum"]).collect()
+    assert len(zcache) == 1 and zcache[0][1] is not displaced
+    assert not displaced.is_cached and not displaced.storageLevel.useMemory
+    # b's cells, not a's cached ones
+    assert [(r["zone_id"], r["count"], r["sum"]) for r in out] == [(5, 9, _zone_sum(5))]
+
+
+def test_zone_cell_cache_evicts_least_recently_used(spark, zcache, monkeypatch):
+    from pythongis_spark.raster import zonal as Z
+
+    monkeypatch.setattr(Z, "_ZCELLS_CACHE_MAX", 2)
+    cells = _value_cells(spark)
+    layers = [_zone_layer(spark, x0) for x0 in (0, 3, 6)]
+
+    def run(i):
+        Z.zonal_statistics(layers[i], cells, RD, stats=["count"])
+        return next(reversed(zcache.values()))[1]
+
+    f0, f1 = run(0), run(1)
+    assert run(0) is f0  # hit: layer 0 becomes the most recently used
+    f2 = run(2)
+    assert [e[1] for e in zcache.values()] == [f0, f2]
+    assert not f1.is_cached and not f1.storageLevel.useMemory
+    assert f0.is_cached and f2.is_cached
