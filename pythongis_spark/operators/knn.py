@@ -45,6 +45,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pythongis_spark import plan_cache
 from pythongis_spark.index import udfs as IU
 from pythongis_spark.index import quadkey as Q
 
@@ -465,7 +466,8 @@ def _knn_arrow(pts: DataFrame, tgt: DataFrame, k: int, point_id: str,
     pruning); and when the probe scan has fewer
     partitions than the cluster's parallelism (single-row-group local
     parquet), it is hash-repartitioned so the Python stage runs on every
-    core — a real many-row-group table skips the exchange."""
+    core — a real many-row-group table skips the exchange. The scan's
+    partition count is probed once per plan (``plan_cache``)."""
     from pyspark.sql import types as T
 
     tdf = tgt.toPandas()
@@ -488,7 +490,9 @@ def _knn_arrow(pts: DataFrame, tgt: DataFrame, k: int, point_id: str,
     )
 
     par = pts.sparkSession.sparkContext.defaultParallelism
-    if not pts.isStreaming and pts.rdd.getNumPartitions() < par:
+    if not pts.isStreaming and plan_cache.memo(
+        pts, "scan_partitions", lambda: pts.rdd.getNumPartitions()
+    ) < par:
         pts = pts.repartition(par, F.col(point_id))
 
     def gen(batches):

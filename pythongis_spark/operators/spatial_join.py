@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 
 from pythongis_spark.geometry import core as G
 from pythongis_spark.geometry import wkb as W
+from pythongis_spark import plan_cache
 from pythongis_spark.index import udfs as IU
 
 DEFAULT_BROADCAST_ROWS = 1_000_000  # exploded build rows still broadcastable
@@ -190,112 +191,6 @@ def _geom_equals(ga, gb) -> bool:
 # planning helpers
 # ------------------------------------------------------------------
 
-_PLAN_STATS: dict[tuple, object] = {}
-
-
-def _sem_key(df: DataFrame):
-    """Stable per-plan cache key (None disables caching for plans that
-    can't be hashed)."""
-    try:
-        return df.semanticHash()
-    except Exception:
-        return None
-
-
-def _plan_stat(key: tuple, fn, df: DataFrame = None):
-    """Session-lifetime memo for plan-time sizing jobs (giant-feature
-    emptiness probes, build-side cell counts). Repeated joins against
-    the same dimension table — the common pattern the reference serves
-    with its cached r-tree — then plan with ZERO pre-jobs. Stats can go
-    stale if the underlying files change mid-session; call
-    ``clear_plan_stats()`` then (same contract as catalog statistics).
-
-    ``semanticHash`` is 32-bit, so hits are CONFIRMED with
-    ``sameSemantics`` against the stored source frame (a collision or a
-    stale frame from a stopped session falls through to a recompute
-    instead of silently serving another plan's answer)."""
-    if key[1] is None:
-        return fn()
-    hit = _PLAN_STATS.get(key)
-    if hit is not None:
-        src, val = hit
-        if df is None or _same_plan(df, src):
-            return val
-    if len(_PLAN_STATS) > 256:
-        _PLAN_STATS.clear()
-    val = fn()
-    _PLAN_STATS[key] = (df, val)
-    return val
-
-
-def _same_plan(a: DataFrame, b: DataFrame) -> bool:
-    try:
-        return a.sameSemantics(b)
-    except Exception:
-        return False
-
-
-import collections
-import threading
-
-# Keyed LRU of PERSISTED broadcast build sides (the cell-exploded
-# dimension table): the explode + bbox pandas-UDF chain re-ran on every
-# query against the same dimension (~0.4 s/call measured at bench
-# scale). Broadcast-path only — a shuffled build side may be large.
-# Same staleness contract as _PLAN_STATS (files changed mid-session →
-# clear_plan_stats()).
-_BUILD_CACHE: "collections.OrderedDict[tuple, DataFrame]" = collections.OrderedDict()
-_BUILD_CACHE_MAX = 8
-_BUILD_LOCK = threading.Lock()
-
-
-def _cached_build(key: tuple, make, src: DataFrame = None):
-    if key[1] is None:  # unhashable plan: no caching
-        return make()
-    with _BUILD_LOCK:
-        hit = _BUILD_CACHE.get(key)
-        if hit is not None:
-            cached_src, df = hit
-            # confirm the 32-bit hash hit (collision / stale session →
-            # recompute rather than serve another plan's build side)
-            if src is None or _same_plan(src, cached_src):
-                _BUILD_CACHE.move_to_end(key)
-                return df
-    df = make().persist()
-    with _BUILD_LOCK:
-        displaced = _BUILD_CACHE.get(key)
-        if displaced is not None:
-            # a sameSemantics-rejected hit is being replaced at the same
-            # key: unpersist the evicted frame or its executor storage
-            # leaks until session end (ADVICE r5)
-            try:
-                displaced[1].unpersist(blocking=False)
-            except Exception:
-                pass
-        _BUILD_CACHE[key] = (src, df)
-        while len(_BUILD_CACHE) > _BUILD_CACHE_MAX:
-            _, (_, old) = _BUILD_CACHE.popitem(last=False)
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass
-    return df
-
-
-def clear_plan_stats() -> None:
-    _PLAN_STATS.clear()
-    with _BUILD_LOCK:
-        for _, df in _BUILD_CACHE.values():
-            # entries are (src, df) tuples — unpersist the FRAME (the old
-            # loop called .unpersist on the tuple, which raised into the
-            # except and silently leaked every cached build side)
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass
-        _BUILD_CACHE.clear()
-
-
 def _prefix(df: DataFrame, prefix: str, exclude=()) -> DataFrame:
     for c in df.columns:
         if c not in exclude:
@@ -396,20 +291,19 @@ def point_in_polygon_join(
     # gate the nested-loop leg on actual giants: the check is one tiny
     # job on the polygon DIM side; without it the NL leg re-scans the
     # probe table even when no giant exists (measurable regression).
-    # Memoized per semantic plan like spatial_join's sizing jobs —
-    # repeated joins against the same dimension table (the common
-    # pattern) re-plan with zero pre-jobs (~0.4 s/call measured).
-    has_giants = _plan_stat(
-        ("giants", _sem_key(polygons), z, DEFAULT_CELL_CAP),
-        lambda: polys_g.limit(1).count() > 0, polygons,
+    # Every probe below, and the broadcast build side, is memoized per
+    # semantic plan: repeated joins against the same dimension table
+    # (the common pattern) re-plan with zero pre-jobs (~0.4 s/call
+    # measured). If the files under a dimension change mid-session,
+    # plan_cache.clear() drops the stale facts.
+    has_giants = plan_cache.memo(
+        polygons, ("giants", z, DEFAULT_CELL_CAP),
+        lambda: polys_g.limit(1).count() > 0,
     )
     polys_n = polygons.filter(cnt <= DEFAULT_CELL_CAP) if has_giants else polygons
 
     # build side: polygons exploded to covering cells
-    def _make_build():
-        return _prefix(IU.explode_bbox_cells(polys_n, z), "r_", exclude=["cell"])
-
-    build = _make_build()
+    build = _prefix(IU.explode_bbox_cells(polys_n, z), "r_", exclude=["cell"])
     # probe side: single cell per point (pure Catalyst)
     # null coordinates never match (reference skips null geometry,
     # manager.py:393-398); keepall re-adds them via the outer join below
@@ -422,13 +316,16 @@ def point_in_polygon_join(
     if build_rows is not None:
         build_count = build_rows
     else:
-        build_count = _plan_stat(
-            ("cells", _sem_key(polys_n), z, DEFAULT_CELL_CAP), build.count,
-            polys_n,
+        build_count = plan_cache.memo(
+            polygons, ("cells", z, DEFAULT_CELL_CAP), build.count
         )
     if build_count <= broadcast_rows:
-        build = _cached_build(("build", _sem_key(polys_n), z), _make_build, polys_n)
-        cand = probe.join(F.broadcast(build), "cell", "inner")
+        # persisted: the explode + bbox UDF chain runs once per dimension
+        # (broadcast path only; a shuffled build side may be large)
+        cached = plan_cache.memo(
+            polygons, ("build", z, DEFAULT_CELL_CAP), lambda: build
+        )
+        cand = probe.join(F.broadcast(cached), "cell", "inner")
     else:
         probe_s, build_s, keys = _salt_plan(
             probe, build, F.col(pid), salt_threshold, max_salt
@@ -460,12 +357,11 @@ def point_in_polygon_join(
     # bit-identical results, no Python in the plan.
     from pythongis_spark.geometry.udfs import st_is_bbox_rect
 
-    all_rect = rect_fast_path and _plan_stat(
-        ("allrect", _sem_key(polygons), 0, 0),
+    all_rect = rect_fast_path and plan_cache.memo(
+        polygons, ("allrect", polygon_geom),
         lambda: polygons.filter(
             ~st_is_bbox_rect(F.col(polygon_geom))
         ).limit(1).count() == 0,
-        polygons,
     )
     if all_rect:
         matched = cand.filter(
@@ -598,13 +494,13 @@ def spatial_join(
     rcnt = _bbox_cell_count_expr(z)
     left_g = left.filter(lcnt > cell_cap)
     right_g = right.filter(rcnt > cell_cap)
-    has_lg = _plan_stat(
-        ("giants", _sem_key(left), z, cell_cap),
-        lambda: left_g.select("bbox_xmin").limit(1).count() > 0, left,
+    has_lg = plan_cache.memo(
+        left, ("giants", z, cell_cap),
+        lambda: left_g.select("bbox_xmin").limit(1).count() > 0,
     )
-    has_rg = _plan_stat(
-        ("giants", _sem_key(right), z, cell_cap),
-        lambda: right_g.select("bbox_xmin").limit(1).count() > 0, right,
+    has_rg = plan_cache.memo(
+        right, ("giants", z, cell_cap),
+        lambda: right_g.select("bbox_xmin").limit(1).count() > 0,
     )
     left_n = left.filter(lcnt <= cell_cap) if has_lg else left
     right_n = right.filter(rcnt <= cell_cap) if has_rg else right
@@ -613,19 +509,14 @@ def spatial_join(
     lx = IU.explode_bbox_cells(left_n, z)
     lx = _prefix(lx, "l_", exclude=["cell"])
 
-    def _make_rx():
-        return _prefix(IU.explode_bbox_cells(right_n, z), "r_", exclude=["cell"])
-
-    rx = _make_rx()
+    rx = _prefix(IU.explode_bbox_cells(right_n, z), "r_", exclude=["cell"])
     if build_rows is not None:
         build_count = build_rows
     else:
-        build_count = _plan_stat(
-            ("cells", _sem_key(right), z, cell_cap), rx.count, right,
-        )
+        build_count = plan_cache.memo(right, ("cells", z, cell_cap), rx.count)
     if build_count <= broadcast_rows:
-        rx = _cached_build(("build", _sem_key(right_n), z), _make_rx, right_n)
-        cand = lx.join(F.broadcast(rx), "cell", "inner")
+        cached = plan_cache.memo(right, ("build", z, cell_cap), lambda: rx)
+        cand = lx.join(F.broadcast(cached), "cell", "inner")
     else:
         probe_s, build_s, keys = _salt_plan(
             lx, rx, F.col("l_" + lid), salt_threshold, max_salt
@@ -667,12 +558,11 @@ def spatial_join(
     from pythongis_spark.geometry.udfs import st_is_bbox_rect
 
     def _all_rect(df, geom_col):
-        return _plan_stat(
-            ("allrect", _sem_key(df), 0, 0),
+        return plan_cache.memo(
+            df, ("allrect", geom_col),
             lambda: df.filter(
                 ~st_is_bbox_rect(F.col(geom_col))
             ).limit(1).count() == 0,
-            df,
         )
 
     def _bbox_contained(inner: str, outer: str) -> Column:

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pythongis_spark import plan_cache
 from pythongis_spark.geometry import core as G
 from pythongis_spark.geometry import wkb as W
 from pythongis_spark.raster.algebra import STATS_EXPRS, band_stats
@@ -430,15 +431,6 @@ def rasterize(
     return out.withColumn("band", F.lit(0).cast("int")).select("x", "y", "band", "val")
 
 
-import collections
-import threading
-
-# bounded LRU of persisted zone-cell frames — see zonal_statistics
-_ZCELLS_CACHE: "collections.OrderedDict[object, DataFrame]" = collections.OrderedDict()
-_ZCELLS_CACHE_MAX = 4
-_ZCELLS_LOCK = threading.Lock()
-
-
 def zonal_statistics_points(
     points: DataFrame,
     raster_cells: DataFrame,
@@ -485,64 +477,15 @@ def zonal_statistics(
         n_cells = zone_cells_hint
     else:
         # the sizing count would otherwise re-execute the cover UDF
-        # chain for the join — persist the (small) zone-cell side once.
-        # The returned plan still reads the cache, so it can't be
-        # unpersisted here; instead a small keyed LRU releases the
-        # OLDEST caches (non-blocking), bounding executor storage in
-        # long-lived sessions while keeping recent plans (incl. other
-        # still-unexecuted zonal_statistics results) cached. Keyed by
-        # semantic hash so repeat calls on the same zones reuse one
-        # cache; guarded by a lock for concurrent-caller safety.
-        try:
-            key = zcells.semanticHash()
-        except Exception:
-            key = id(zcells)
-        n_cells = None
-        with _ZCELLS_LOCK:
-            cached = _ZCELLS_CACHE.get(key)
-            # semanticHash is 32-bit: confirm the hit with sameSemantics
-            # so a collision (or a frame from a stopped session) falls
-            # through to a fresh persist instead of serving another
-            # zone layer's cells; touch the entry so the bound evicts
-            # least-recently-USED, not oldest-inserted
-            if cached is not None:
-                try:
-                    same = zcells.sameSemantics(cached[0])
-                except Exception:
-                    same = False
-                cached = cached if same else None
-            if cached is not None:
-                _ZCELLS_CACHE.move_to_end(key)
-                # r6: the sizing count is memoized with the entry — a
-                # cache hit previously still scheduled a count job per
-                # call (fast on the persisted frame, but one whole job
-                # of fixed latency per zonal_statistics invocation)
-                zcells, n_cells = cached[1], cached[2]
-            else:
-                src = zcells
-                zcells = zcells.persist()
-                displaced = _ZCELLS_CACHE.get(key)
-                if displaced is not None:
-                    # sameSemantics-rejected hit replaced at the same
-                    # key: unpersist the evicted frame or its storage
-                    # leaks until session end (ADVICE r5)
-                    try:
-                        displaced[1].unpersist(blocking=False)
-                    except Exception:
-                        pass
-                _ZCELLS_CACHE[key] = (src, zcells, None)
-                while len(_ZCELLS_CACHE) > _ZCELLS_CACHE_MAX:
-                    _, (_, old, _) = _ZCELLS_CACHE.popitem(last=False)
-                    try:
-                        old.unpersist(blocking=False)
-                    except Exception:
-                        pass
-        if n_cells is None:
-            n_cells = zcells.count()
-            with _ZCELLS_LOCK:
-                e = _ZCELLS_CACHE.get(key)
-                if e is not None and e[1] is zcells:
-                    _ZCELLS_CACHE[key] = (e[0], e[1], n_cells)
+        # chain for the join: persist the (small) zone-cell side once and
+        # memoize its count, both per semantic plan (plan_cache), so a
+        # repeat call on the same zones schedules no sizing job. The
+        # returned plan still reads the persisted frame, so it can't be
+        # unpersisted here; the cache's LRU bound releases it instead,
+        # and plan_cache.clear() if the zones' files change mid-session.
+        src = zcells
+        zcells = plan_cache.memo(src, "zone_cells", lambda: src)
+        n_cells = plan_cache.memo(src, "zone_cells.count", zcells.count)
     build = F.broadcast(zcells) if n_cells <= broadcast_cells else zcells
     joined = raster_cells.join(build, ["x", "y"], "inner")
     return band_stats(

@@ -199,6 +199,22 @@ def test_knn_tiny_path_repartitions_single_partition_probe(spark, small):
     assert _collect_knn(got) == brute_knn(pts, tgt, 3)
 
 
+def test_knn_scan_partition_probe_memoized(spark, small, monkeypatch):
+    """The scan-partition probe (``DataFrame.rdd``) runs once per points
+    plan: a repeat knn_join on the same points plans without it."""
+    spts, stgt, pts, tgt = small
+    first = knn_join(spts, stgt, 3, point_id="p_id", target_id="t_id")
+    touched = []
+    cls = type(spts)
+    rdd = cls.rdd
+    monkeypatch.setattr(
+        cls, "rdd", property(lambda df: touched.append(df) or rdd.__get__(df, cls))
+    )
+    again = knn_join(spts, stgt, 3, point_id="p_id", target_id="t_id")
+    assert touched == []
+    assert _collect_knn(again) == _collect_knn(first) == brute_knn(pts, tgt, 3)
+
+
 def test_knn_point_cols_restriction_identical(spark, small):
     """r6: point_cols restricts the point-side columns serialized out of
     the opaque Arrow stage; rows must equal selecting afterwards."""

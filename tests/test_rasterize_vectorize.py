@@ -6,6 +6,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pythongis_spark.geometry import core as G
@@ -343,20 +344,21 @@ def test_cover_runs_row_blocks_do_not_change_result(monkeypatch):
 
 
 # ------------------------------------------------------------------
-# zonal_statistics zone-cell cache (_ZCELLS_CACHE)
+# plan cache: zonal_statistics zone cells and the point_in_polygon_join
+# broadcast build side
 # ------------------------------------------------------------------
 
 @pytest.fixture
-def zcache(monkeypatch):
+def pcache(monkeypatch):
     import collections
 
-    from pythongis_spark.raster import zonal as Z
+    from pythongis_spark import plan_cache
 
     cache = collections.OrderedDict()
-    monkeypatch.setattr(Z, "_ZCELLS_CACHE", cache)
+    monkeypatch.setattr(plan_cache, "_ENTRIES", cache)
     yield cache
-    for _, frame, _ in cache.values():
-        frame.unpersist()
+    for _, facts in cache.values():
+        plan_cache._release(facts)
 
 
 def _zone_layer(spark, x0):
@@ -377,53 +379,114 @@ def _zone_sum(x0):
     return float(sum(10 * x + y for x in range(x0, x0 + 3) for y in range(7, 10)))
 
 
-def test_zone_cell_cache_hit_reuses_frame_and_count(spark, zcache, monkeypatch):
+def _zonal_call(spark):
     from pythongis_spark.raster import zonal as Z
 
-    zones, cells = _zone_layer(spark, 0), _value_cells(spark)
-    first = Z.zonal_statistics(zones, cells, RD, stats=["count", "sum"]).collect()
-    [(key, (_, frame, n_cells))] = zcache.items()
-    assert n_cells == 9
+    cells = _value_cells(spark)
+    return lambda zones: Z.zonal_statistics(
+        zones, cells, RD, stats=["count", "sum"]
+    ).select("zone_id", "count", "sum")
+
+
+PIP_Z = 8
+
+
+def _pip_call(spark):
+    from pythongis_spark.operators.spatial_join import point_in_polygon_join
+
+    # one point per RD cell centre, carrying that cell's value
+    pts = spark.createDataFrame(
+        [(10 * x + y, x + 0.5, 9.5 - y, float(10 * x + y))
+         for x in range(10) for y in range(10)],
+        "pid INT, lon DOUBLE, lat DOUBLE, val DOUBLE",
+    )
+    return lambda zones: (
+        point_in_polygon_join(pts, zones, point_id="pid", z=PIP_Z)
+        .groupBy("zone_id")
+        .agg(F.count("*").alias("count"), F.sum("val").alias("sum"))
+    )
+
+
+# kind -> (call(spark) -> run(zones) planning (zone_id, count, sum) rows,
+#          memoized sizing-count fact, its value for _zone_layer(spark, 0))
+CACHED = {
+    "zone_cells": (_zonal_call, "zone_cells.count", 9),
+    # the 3 x 3 degree rect spans 3 x 6 level-8 index cells
+    "pip_build": (_pip_call, ("cells", PIP_Z, 4096), 18),
+}
+
+
+def _frame(facts):
+    """The one persisted frame among an entry's facts."""
+    [frame] = [v for v in facts.values() if isinstance(v, DataFrame)]
+    return frame
+
+
+@pytest.mark.parametrize("kind", CACHED)
+def test_plan_cache_hit_reuses_frame_and_count(spark, pcache, monkeypatch, kind):
+    call, count_fact, n_cells = CACHED[kind]
+    run, zones = call(spark), _zone_layer(spark, 0)
+    first = run(zones).collect()
+    [(key, (_, facts))] = pcache.items()
+    frame = _frame(facts)
+    assert facts[count_fact] == n_cells
     counted = []
     orig = type(frame).count
     monkeypatch.setattr(type(frame), "count", lambda df: counted.append(df) or orig(df))
-    again = Z.zonal_statistics(zones, cells, RD, stats=["count", "sum"])
+    again = run(zones)
     assert counted == []  # the memoized count: no sizing job on a hit
-    assert list(zcache) == [key] and zcache[key][1] is frame
+    assert list(pcache) == [key] and _frame(pcache[key][1]) is frame
     assert sorted(again.collect()) == sorted(first)
-    assert first[0]["count"] == 9 and first[0]["sum"] == _zone_sum(0)
+    assert [tuple(r) for r in first] == [(0, 9, _zone_sum(0))]
 
 
-def test_zone_cell_cache_collision_persists_afresh(spark, zcache, monkeypatch):
-    from pythongis_spark.raster import zonal as Z
-
-    a, b, cells = _zone_layer(spark, 0), _zone_layer(spark, 5), _value_cells(spark)
+@pytest.mark.parametrize("kind", CACHED)
+def test_plan_cache_collision_persists_afresh(spark, pcache, monkeypatch, kind):
+    run = CACHED[kind][0](spark)
+    a, b = _zone_layer(spark, 0), _zone_layer(spark, 5)
     # every plan hashes alike: only sameSemantics tells the layers apart
     monkeypatch.setattr(type(a), "semanticHash", lambda df: 0)
-    Z.zonal_statistics(a, cells, RD, stats=["count", "sum"])
-    displaced = zcache[0][1]
+    run(a)
+    displaced = _frame(pcache[0][1])
     assert displaced.is_cached
-    out = Z.zonal_statistics(b, cells, RD, stats=["count", "sum"]).collect()
-    assert len(zcache) == 1 and zcache[0][1] is not displaced
+    out = run(b).collect()
+    assert len(pcache) == 1 and _frame(pcache[0][1]) is not displaced
     assert not displaced.is_cached and not displaced.storageLevel.useMemory
     # b's cells, not a's cached ones
-    assert [(r["zone_id"], r["count"], r["sum"]) for r in out] == [(5, 9, _zone_sum(5))]
+    assert [tuple(r) for r in out] == [(5, 9, _zone_sum(5))]
 
 
-def test_zone_cell_cache_evicts_least_recently_used(spark, zcache, monkeypatch):
-    from pythongis_spark.raster import zonal as Z
+@pytest.mark.parametrize("kind", CACHED)
+def test_plan_cache_evicts_least_recently_used(spark, pcache, monkeypatch, kind):
+    from pythongis_spark import plan_cache
 
-    monkeypatch.setattr(Z, "_ZCELLS_CACHE_MAX", 2)
-    cells = _value_cells(spark)
+    monkeypatch.setattr(plan_cache, "MAX_PLANS", 2)
+    run = CACHED[kind][0](spark)
     layers = [_zone_layer(spark, x0) for x0 in (0, 3, 6)]
 
-    def run(i):
-        Z.zonal_statistics(layers[i], cells, RD, stats=["count"])
-        return next(reversed(zcache.values()))[1]
+    def plan(i):
+        run(layers[i])
+        return _frame(next(reversed(pcache.values()))[1])
 
-    f0, f1 = run(0), run(1)
-    assert run(0) is f0  # hit: layer 0 becomes the most recently used
-    f2 = run(2)
-    assert [e[1] for e in zcache.values()] == [f0, f2]
+    f0, f1 = plan(0), plan(1)
+    assert plan(0) is f0  # hit: layer 0 becomes the most recently used
+    f2 = plan(2)
+    assert [_frame(facts) for _, facts in pcache.values()] == [f0, f2]
     assert not f1.is_cached and not f1.storageLevel.useMemory
     assert f0.is_cached and f2.is_cached
+
+
+@pytest.mark.parametrize("kind", CACHED)
+def test_plan_cache_clear_releases_frames(spark, pcache, kind):
+    from pythongis_spark import plan_cache
+
+    run, zones = CACHED[kind][0](spark), _zone_layer(spark, 0)
+    run(zones)
+    old = _frame(pcache[next(iter(pcache))][1])
+    plan_cache.clear()
+    assert not pcache
+    assert not old.is_cached and not old.storageLevel.useMemory
+    out = run(zones).collect()
+    fresh = _frame(pcache[next(iter(pcache))][1])
+    assert fresh is not old and fresh.is_cached
+    assert [tuple(r) for r in out] == [(0, 9, _zone_sum(0))]

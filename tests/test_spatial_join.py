@@ -523,6 +523,29 @@ def test_pip_rect_fast_path_equals_refine_randomized(spark):
     assert pf == ps and pf
 
 
+def test_pip_rect_probe_keyed_by_geometry_column(spark):
+    """The memoized all-rectangle probe belongs to the joined geometry
+    column: a triangle sharing its bbox with a square must be refined
+    even after a join on the square took the rectangle fast path."""
+    from pythongis_spark.geometry.udfs import with_bbox
+
+    sq = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]], float)
+    tri = np.array([[0, 0], [4, 0], [0, 4], [0, 0]], float)
+    zones = with_bbox(spark.createDataFrame(pd.DataFrame({
+        "zone_id": [7], "sq": [W.wkb_polygon(sq)], "tri": [W.wkb_polygon(tri)],
+    })), "sq")
+    pts = spark.createDataFrame(
+        pd.DataFrame({"pid": [1, 2], "lon": [1.0, 3.0], "lat": [1.0, 3.0]})
+    )
+
+    def pids(geom):
+        got = point_in_polygon_join(pts, zones, polygon_geom=geom, point_id="pid")
+        return sorted(r["pid"] for r in got.collect())
+
+    assert pids("sq") == [1, 2]
+    assert pids("tri") == [1]
+
+
 def test_geom_equals_is_topological():
     """condition='equals' must match topologically equal geometries —
     the same ring started at a different vertex, or MultiPolygon parts
