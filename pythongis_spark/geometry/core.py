@@ -61,14 +61,6 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, geom) -> np.ndarray:
     return inside
 
 
-def points_in_polygon_wkb(px, py, poly_wkb: bytes) -> np.ndarray:
-    return points_in_polygon(
-        np.asarray(px, dtype=np.float64),
-        np.asarray(py, dtype=np.float64),
-        W.decode_wkb(poly_wkb),
-    )
-
-
 # ------------------------------------------------------------- measures
 
 def ring_signed_area(ring: np.ndarray) -> float:

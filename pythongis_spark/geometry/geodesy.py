@@ -155,28 +155,6 @@ def vincenty_direct(lon, lat, bearing_deg, distance_m, iterations: int = 10):
     return lon2, np.degrees(lat2)
 
 
-def geodetic_buffer_points(lon, lat, radius_m, resolution: int = 32) -> list:
-    """Geodetic circle polygons around N points — reference walks 360° in
-    `resolution` steps (``pythongis/vector/_helpers.py:210-233``).
-    Returns list of (resolution+1, 2) rings."""
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    bearings = np.linspace(0.0, 360.0, resolution, endpoint=False)
-    rings = []
-    # vectorize over bearings per point (points is the big axis; this is
-    # only used on the small build side of radius joins)
-    for i in range(len(lon)):
-        lon2, lat2 = vincenty_direct(
-            np.full(resolution, lon[i]),
-            np.full(resolution, lat[i]),
-            bearings,
-            np.full(resolution, float(np.asarray(radius_m).flat[i % np.asarray(radius_m).size])),
-        )
-        ring = np.stack([lon2, lat2], axis=1)
-        rings.append(np.vstack([ring, ring[:1]]))
-    return rings
-
-
 # WGS84 authalic radius: the sphere with the ellipsoid's surface area
 WGS84_AUTHALIC_R = 6371007.1809184747
 

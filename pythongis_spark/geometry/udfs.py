@@ -121,16 +121,6 @@ def st_centroid(geom: pd.Series) -> pd.DataFrame:
 
 
 @F.pandas_udf(T.DoubleType())
-def st_distance_points(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
-    """Planar euclidean distance between coordinate pairs."""
-    d = np.sqrt(
-        (lon1.to_numpy(np.float64) - lon2.to_numpy(np.float64)) ** 2
-        + (lat1.to_numpy(np.float64) - lat2.to_numpy(np.float64)) ** 2
-    )
-    return pd.Series(d, index=lon1.index)
-
-
-@F.pandas_udf(T.DoubleType())
 def st_geodetic_distance(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
     """Vincenty inverse distance in meters, numpy-vectorized
     (reference per-row version ``pythongis/vector/_helpers.py:14-91``)."""
@@ -235,10 +225,6 @@ def _buffer_points_udf(lon: pd.Series, lat: pd.Series, radius: pd.Series) -> pd.
     return pd.Series(out, index=lon.index)
 
 
-def st_buffer_points(lon, lat, radius):
-    return _buffer_points_udf(lon, lat, radius)
-
-
 def register_sql_functions(spark) -> None:
     """Expose the ST layer to ``spark.sql`` users:
     ``SELECT st_area(geom) FROM ...``. (Catalyst still plans the pandas
@@ -254,11 +240,6 @@ def register_sql_functions(spark) -> None:
     spark.udf.register("st_intersection", st_intersection)
     spark.udf.register("st_union", st_union)
     spark.udf.register("st_difference", st_difference)
-
-
-def with_point_geom(df, lon_col: str, lat_col: str, out: str = "geom"):
-    """Attach a Point WKB column built from lon/lat columns."""
-    return df.withColumn(out, st_point(F.col(lon_col), F.col(lat_col)))
 
 
 def with_bbox(df, geom_col: str = "geom"):

@@ -235,21 +235,6 @@ def phash_neardup_pairs(
     )
 
 
-def decode_stub_external(fmt: str):
-    """Where a decoder for formats beyond the built-ins would plug in.
-    PNG (incl. Adam7), BMP, baseline JPEG (ITU-T T.81) and GIF87a/89a
-    are implemented for real in ``pythongis_spark.images`` (pure
-    stdlib, public specs); formats beyond those (WebP, progressive/
-    arithmetic JPEG, JPEG 2000, HEIF, ...) need an image library not
-    present in this environment — calling this is an explicit,
-    documented stub."""
-    raise NotImplementedError(
-        f"real {fmt} decode requires an image library not present in this "
-        "environment; PNG/BMP/baseline-JPEG/GIF are implemented natively "
-        "in pythongis_spark.images"
-    )
-
-
 # ------------------------------------------------------------------
 # SQL-replayable integer-exact image fixtures + features
 # ------------------------------------------------------------------

@@ -4,9 +4,13 @@ Reference semantics: ``pythongis/vector/manager.py:160-486`` — an
 index-nested-loop join (per left feature, r-tree bbox probe → exact
 shapely predicate). Our physical plan is Spark-native:
 
+    0. profile   one memoized aggregate per layer (index level, giant
+                 flag and cell total per level, all-rectangle flag) —
+                 the only plan-time job.
     1. index     build side (polygons) exploded to covering quadkey cells
-                 (pandas UDF); probe side (points) gets its single cell via
-                 a pure-Catalyst Morton expression (stays in codegen).
+                 by ``explode(sequence(...))`` over its tile spans; probe
+                 side (points) gets its single cell via a Morton
+                 expression. Both stay in Catalyst codegen.
     2. candidates equi-join on cell — broadcast when the build side is
                  small, else shuffled hash join with *explicit hot-cell
                  salting* (north rule: skew handled explicitly, not left to
@@ -24,6 +28,8 @@ data-parallel over Arrow batches.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -33,11 +39,13 @@ from pyspark.sql import types as T
 from pythongis_spark.geometry import core as G
 from pythongis_spark.geometry import wkb as W
 from pythongis_spark import plan_cache
+from pythongis_spark.index import quadkey as Q
 from pythongis_spark.index import udfs as IU
 
 DEFAULT_BROADCAST_ROWS = 1_000_000  # exploded build rows still broadcastable
 DEFAULT_SALT_THRESHOLD = 100_000  # probe rows per cell before salting
 DEFAULT_MAX_SALT = 32
+DEFAULT_CELL_CAP = 4096  # max covering cells per feature before the NL path
 
 
 # ------------------------------------------------------------------
@@ -198,6 +206,60 @@ def _prefix(df: DataFrame, prefix: str, exclude=()) -> DataFrame:
     return df
 
 
+class _Profile(NamedTuple):
+    """Plan-time facts of one layer."""
+
+    z: int  # index level, as IU.pick_level picks it
+    giants: tuple[bool, ...]  # per level: some feature covers > cell_cap cells
+    cells: tuple[int, ...]  # per level: cells of the features within cell_cap
+    all_rect: bool  # every geometry is exactly its own bbox
+
+
+def _profile(df: DataFrame, geom_col: str, cell_cap: int) -> _Profile:
+    """Every planning fact of a layer from ONE aggregate job, memoized
+    per semantic plan: repeated joins against the same dimension table
+    (the common pattern) re-plan with no job. Each feature is repeated
+    once per level and grouped by level, so one cell-count expression
+    serves every level; the per-level cell totals are exactly the row
+    counts of the build-side explode, so sizing it needs no explode.
+    The rectangle flag is one decode pass, made before the per-level
+    repeat. If the files under a
+    dimension change mid-session, plan_cache.clear() drops the stale
+    facts."""
+    from pythongis_spark.geometry.udfs import st_is_bbox_rect
+
+    def make() -> _Profile:
+        level = F.col("_level")
+        n = IU.bbox_cell_count_expr(level)
+        first = level == 0  # one copy of each feature
+        by_level = {
+            r["_level"]: r.asDict()
+            for r in df.select(
+                *IU.BBOX_COLS, st_is_bbox_rect(F.col(geom_col)).alias("_rect")
+            )
+            .withColumn("_level", F.explode(F.sequence(F.lit(0), F.lit(Q.MAX_LEVEL))))
+            .groupBy("_level")
+            .agg(
+                F.max(n).alias("max"),
+                F.sum(F.when(n <= cell_cap, n)).alias("cells"),
+                *IU.level_stats(first),
+                F.bool_and(F.when(first, F.col("_rect"))).alias("rect"),
+            )
+            .collect()
+        }
+        # an empty layer has no groups: no giants, no cells, all rects
+        levels = [by_level.get(z, {}) for z in range(Q.MAX_LEVEL + 1)]
+        top = levels[0]
+        return _Profile(
+            IU.level_of(top.get("level_w"), top.get("level_h")),
+            tuple((r.get("max") or 0) > cell_cap for r in levels),
+            tuple(r.get("cells") or 0 for r in levels),
+            top.get("rect") is not False,
+        )
+
+    return plan_cache.memo(df, ("profile", geom_col, cell_cap), make)
+
+
 def _salt_plan(probe: DataFrame, build_cells: DataFrame, probe_key: Column,
                salt_threshold: int, max_salt: int):
     """Explicit hot-cell salting: histogram probe cells, replicate build
@@ -277,58 +339,45 @@ def point_in_polygon_join(
         from pythongis_spark.geometry.udfs import with_bbox
 
         polygons = with_bbox(polygons, polygon_geom)
+    prof = _profile(polygons, polygon_geom, DEFAULT_CELL_CAP)
     if z is None:
-        z = IU.pick_level(polygons)
+        z = prof.z
 
     pid = point_id or points.columns[0]
     bbox_cols = ["bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax"]
     # giant-polygon split: features covering > cell_cap cells go to a
     # broadcast nested-loop bbox path instead of the cell explode (one
-    # continental polygon would otherwise expand to up to 4^z rows in a
-    # single UDF call — OOM + skew)
-    cnt = _bbox_cell_count_expr(z)
-    polys_g = polygons.filter(cnt > DEFAULT_CELL_CAP)
-    # gate the nested-loop leg on actual giants: the check is one tiny
-    # job on the polygon DIM side; without it the NL leg re-scans the
-    # probe table even when no giant exists (measurable regression).
-    # Every probe below, and the broadcast build side, is memoized per
-    # semantic plan: repeated joins against the same dimension table
-    # (the common pattern) re-plan with zero pre-jobs (~0.4 s/call
-    # measured). If the files under a dimension change mid-session,
-    # plan_cache.clear() drops the stale facts.
-    has_giants = plan_cache.memo(
-        polygons, ("giants", z, DEFAULT_CELL_CAP),
-        lambda: polys_g.limit(1).count() > 0,
-    )
-    polys_n = polygons.filter(cnt <= DEFAULT_CELL_CAP) if has_giants else polygons
+    # continental polygon would otherwise expand to up to 4^z rows —
+    # OOM + skew). The leg exists only when the profile saw a giant:
+    # otherwise it would re-scan the probe table for nothing.
+    has_giants = prof.giants[z]
+    polys_n = polygons
+    if has_giants:
+        cnt = IU.bbox_cell_count_expr(z)
+        polys_g = polygons.filter(cnt > DEFAULT_CELL_CAP)
+        polys_n = polygons.filter(cnt <= DEFAULT_CELL_CAP)
 
-    # build side: polygons exploded to covering cells
-    build = _prefix(IU.explode_bbox_cells(polys_n, z), "r_", exclude=["cell"])
+    def build() -> DataFrame:
+        # polygons exploded to covering cells; a warm plan never builds it
+        return _prefix(IU.explode_bbox_cells(polys_n, z), "r_", exclude=["cell"])
+
     # probe side: single cell per point (pure Catalyst)
     # null coordinates never match (reference skips null geometry,
     # manager.py:393-398); keepall re-adds them via the outer join below
     probe = points.filter(F.col(lon).isNotNull() & F.col(lat).isNotNull())
     probe = probe.withColumn("cell", IU.point_cell_expr(F.col(lon), F.col(lat), z))
 
-    # planning statistic: an explicit hint avoids an extra job when the
-    # caller knows the build side (dimension tables, repeated joins);
-    # without a hint the sizing count is memoized per semantic plan
-    if build_rows is not None:
-        build_count = build_rows
-    else:
-        build_count = plan_cache.memo(
-            polygons, ("cells", z, DEFAULT_CELL_CAP), build.count
-        )
+    # planning statistic: the profile's closed-form cell total, unless
+    # the caller forces a path with an explicit hint
+    build_count = prof.cells[z] if build_rows is None else build_rows
     if build_count <= broadcast_rows:
-        # persisted: the explode + bbox UDF chain runs once per dimension
-        # (broadcast path only; a shuffled build side may be large)
-        cached = plan_cache.memo(
-            polygons, ("build", z, DEFAULT_CELL_CAP), lambda: build
-        )
+        # persisted: the explode runs once per dimension (broadcast path
+        # only; a shuffled build side may be large)
+        cached = plan_cache.memo(polygons, ("build", z, DEFAULT_CELL_CAP), build)
         cand = probe.join(F.broadcast(cached), "cell", "inner")
     else:
         probe_s, build_s, keys = _salt_plan(
-            probe, build, F.col(pid), salt_threshold, max_salt
+            probe, build(), F.col(pid), salt_threshold, max_salt
         )
         cand = probe_s.join(build_s, keys, "inner").drop("salt")
     cand = cand.drop("cell")
@@ -349,21 +398,13 @@ def point_in_polygon_join(
         cand = cand.filter(F.col(lcol) == F.col("r_" + rcol))
 
     # rectangle fast path: when EVERY build polygon is exactly its own
-    # bbox (gridded zone/tile dimensions — detected once per semantic
-    # plan), the ray-cast parity reduces to the HALF-OPEN box test
+    # bbox (gridded zone/tile dimensions — the profile's flag), the
+    # ray-cast parity reduces to the HALF-OPEN box test
     # x0 <= px < x1 AND y0 <= py < y1 (horizontal edges never cross a
     # horizontal ray; left/right edges give odd parity exactly in that
     # range), so a pure-codegen predicate replaces the Arrow refine —
     # bit-identical results, no Python in the plan.
-    from pythongis_spark.geometry.udfs import st_is_bbox_rect
-
-    all_rect = rect_fast_path and plan_cache.memo(
-        polygons, ("allrect", polygon_geom),
-        lambda: polygons.filter(
-            ~st_is_bbox_rect(F.col(polygon_geom))
-        ).limit(1).count() == 0,
-    )
-    if all_rect:
+    if rect_fast_path and prof.all_rect:
         matched = cand.filter(
             (F.col(lon) >= F.col("r_bbox_xmin"))
             & (F.col(lon) < F.col("r_bbox_xmax"))
@@ -406,19 +447,6 @@ def point_in_polygon_join(
     return out
 
 
-def _bbox_cell_count_expr(z: int, prefix: str = "") -> Column:
-    """Number of level-z cells a bbox covers, as a pure Catalyst
-    expression — the planning statistic behind the giant-feature split
-    (one continental geometry would otherwise explode to up to 4^z rows
-    inside a single UDF call: executor OOM + pathological skew)."""
-    n = 1 << z
-    tx0 = F.greatest(F.lit(0), F.floor((F.col(prefix + "bbox_xmin") + 180.0) / 360.0 * n))
-    tx1 = F.least(F.lit(n - 1), F.floor((F.col(prefix + "bbox_xmax") + 180.0) / 360.0 * n))
-    ty0 = F.greatest(F.lit(0), F.floor((90.0 - F.col(prefix + "bbox_ymax")) / 180.0 * n))
-    ty1 = F.least(F.lit(n - 1), F.floor((90.0 - F.col(prefix + "bbox_ymin")) / 180.0 * n))
-    return (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
-
-
 def _bbox_overlap_cond(lp: str = "l_", rp: str = "r_") -> Column:
     """Codegen bbox-intersects condition — culls candidate pairs JVM-side
     before any Python refine."""
@@ -428,9 +456,6 @@ def _bbox_overlap_cond(lp: str = "l_", rp: str = "r_") -> Column:
         & (F.col(lp + "bbox_ymin") <= F.col(rp + "bbox_ymax"))
         & (F.col(rp + "bbox_ymin") <= F.col(lp + "bbox_ymax"))
     )
-
-
-DEFAULT_CELL_CAP = 4096  # max covering cells per feature before the NL path
 
 
 def spatial_join(
@@ -461,8 +486,9 @@ def spatial_join(
       are eliminated shuffle-free by the reference-point rule (a pair
       is emitted only in the cell containing the SW corner of the bbox
       intersection);
-    * right side broadcast when small (``build_rows`` hint skips the
-      sizing job), else shuffled with explicit hot-cell salting;
+    * right side broadcast when its profile's cell total is small
+      (a ``build_rows`` hint forces the path), else shuffled with
+      explicit hot-cell salting;
     * features covering > ``cell_cap`` cells are split off to a
       broadcast nested-loop bbox join (they are few by definition, and
       exploding them would OOM one task);
@@ -480,46 +506,40 @@ def spatial_join(
         left = with_bbox(left, left_geom)
     if "bbox_xmin" not in right.columns:
         right = with_bbox(right, right_geom)
+    lprof = _profile(left, left_geom, cell_cap)
+    rprof = _profile(right, right_geom, cell_cap)
     if z is None:
-        z = min(IU.pick_level(left), IU.pick_level(right))
+        z = min(lprof.z, rprof.z)
 
     lid = left_id or left.columns[0]
     bbox_cols = ("bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax")
 
-    # giant-feature split (either side): cells-covered is pure Catalyst.
-    # Each emptiness check is one bbox-columns-only pruned scan of that
-    # side; when a side has no giants its nested-loop leg (and the extra
-    # full-table scan it would imply) is skipped entirely.
-    lcnt = _bbox_cell_count_expr(z)
-    rcnt = _bbox_cell_count_expr(z)
-    left_g = left.filter(lcnt > cell_cap)
-    right_g = right.filter(rcnt > cell_cap)
-    has_lg = plan_cache.memo(
-        left, ("giants", z, cell_cap),
-        lambda: left_g.select("bbox_xmin").limit(1).count() > 0,
-    )
-    has_rg = plan_cache.memo(
-        right, ("giants", z, cell_cap),
-        lambda: right_g.select("bbox_xmin").limit(1).count() > 0,
-    )
-    left_n = left.filter(lcnt <= cell_cap) if has_lg else left
-    right_n = right.filter(rcnt <= cell_cap) if has_rg else right
+    # giant-feature split (either side): cells-covered is pure Catalyst;
+    # when a side's profile saw no giant, its nested-loop leg (and the
+    # extra full-table scan it would imply) is skipped entirely.
+    has_lg, has_rg = lprof.giants[z], rprof.giants[z]
+    left_n, right_n = left, right
+    if has_lg or has_rg:
+        cnt = IU.bbox_cell_count_expr(z)
+        left_g, right_g = left.filter(cnt > cell_cap), right.filter(cnt > cell_cap)
+        left_n = left.filter(cnt <= cell_cap) if has_lg else left
+        right_n = right.filter(cnt <= cell_cap) if has_rg else right
 
     lxall = _prefix(left, "l_")
     lx = IU.explode_bbox_cells(left_n, z)
     lx = _prefix(lx, "l_", exclude=["cell"])
 
-    rx = _prefix(IU.explode_bbox_cells(right_n, z), "r_", exclude=["cell"])
-    if build_rows is not None:
-        build_count = build_rows
-    else:
-        build_count = plan_cache.memo(right, ("cells", z, cell_cap), rx.count)
+    def rx() -> DataFrame:
+        # a warm plan never builds the right side's cells
+        return _prefix(IU.explode_bbox_cells(right_n, z), "r_", exclude=["cell"])
+
+    build_count = rprof.cells[z] if build_rows is None else build_rows
     if build_count <= broadcast_rows:
-        cached = plan_cache.memo(right, ("build", z, cell_cap), lambda: rx)
+        cached = plan_cache.memo(right, ("build", z, cell_cap), rx)
         cand = lx.join(F.broadcast(cached), "cell", "inner")
     else:
         probe_s, build_s, keys = _salt_plan(
-            lx, rx, F.col("l_" + lid), salt_threshold, max_salt
+            lx, rx(), F.col("l_" + lid), salt_threshold, max_salt
         )
         cand = probe_s.join(build_s, keys, "inner").drop("salt")
 
@@ -555,16 +575,6 @@ def spatial_join(
     # demand automatically) — parity with the geometric predicates
     # verified per case in test_spatial_join, so the Arrow pair refine
     # is skipped and the plan stays whole-stage codegen.
-    from pythongis_spark.geometry.udfs import st_is_bbox_rect
-
-    def _all_rect(df, geom_col):
-        return plan_cache.memo(
-            df, ("allrect", geom_col),
-            lambda: df.filter(
-                ~st_is_bbox_rect(F.col(geom_col))
-            ).limit(1).count() == 0,
-        )
-
     def _bbox_contained(inner: str, outer: str) -> Column:
         return (
             (F.col(inner + "bbox_xmin") >= F.col(outer + "bbox_xmin"))
@@ -580,8 +590,8 @@ def spatial_join(
     if (
         rect_fast_path
         and condition in _RECT_EXACT
-        and _all_rect(left, left_geom)
-        and _all_rect(right, right_geom)
+        and lprof.all_rect
+        and rprof.all_rect
     ):
         if condition == "intersects":
             matched = cand  # bbox prefilter above is already exact

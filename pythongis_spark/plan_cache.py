@@ -1,11 +1,11 @@
 """Session-lifetime memo of facts derived from source plans.
 
-Plan-time probes (giant-feature and all-rectangle checks, build-side
-sizing counts, scan partition counts) and persisted build sides are
-facts about one source plan. Memoizing them means a repeated join
-against the same dimension table -- the pattern the reference serves
-with its cached r-tree -- plans with zero pre-jobs and reads its build
-side from storage.
+Plan-time probes (the spatial joins' layer profiles, zone cell counts,
+scan partition counts) and persisted build sides are facts about one
+source plan. Memoizing them means a repeated join against the same
+dimension table -- the pattern the reference serves with its cached
+r-tree -- plans with zero pre-jobs and reads its build side from
+storage.
 
 One LRU of at most ``MAX_PLANS`` source plans, keyed by
 ``semanticHash``. That hash is 32-bit, so every hit is confirmed with
@@ -53,7 +53,7 @@ def memo(src: DataFrame, fact, make):
     """Return ``make()``, memoized as ``fact`` of the plan ``src``.
 
     ``fact`` names the fact and carries every parameter it depends on
-    besides ``src`` (for example ``("cells", z, cell_cap)``). A
+    besides ``src`` (for example ``("profile", geom_col, cell_cap)``). A
     DataFrame result is persisted and stays cached while its entry
     does. A plan whose ``semanticHash`` raises is computed without
     memoizing it."""

@@ -431,24 +431,6 @@ def rasterize(
     return out.withColumn("band", F.lit(0).cast("int")).select("x", "y", "band", "val")
 
 
-def zonal_statistics_points(
-    points: DataFrame,
-    raster_cells: DataFrame,
-    rd: RasterDef,
-    zone_col: str,
-    lon: str = "lon",
-    lat: str = "lat",
-    stats: list[str] | None = None,
-) -> DataFrame:
-    """Zonal stats where zones come from tagged points: map each value
-    cell... — inverse sampling: assign each point to its cell and join the
-    raster value (point-sample + per-zone aggregate)."""
-    cx, cy = geo_to_cell_exprs(rd, F.col(lon), F.col(lat))
-    pts = points.withColumn("x", cx).withColumn("y", cy)
-    joined = pts.join(raster_cells, ["x", "y"], "inner")
-    return band_stats(joined, stats or ["count", "sum", "mean", "min", "max"], by=[zone_col, "band"])
-
-
 def zonal_statistics(
     zones: DataFrame,
     raster_cells: DataFrame,

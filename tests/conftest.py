@@ -19,3 +19,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def pcache(monkeypatch):
+    """An empty plan cache for the test; its frames are released after."""
+    import collections
+
+    from pythongis_spark import plan_cache
+
+    cache = collections.OrderedDict()
+    monkeypatch.setattr(plan_cache, "_ENTRIES", cache)
+    yield cache
+    for _, facts in cache.values():
+        plan_cache._release(facts)

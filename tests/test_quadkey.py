@@ -1,4 +1,5 @@
 import numpy as np
+import pytest
 
 from pythongis_spark.index import quadkey as Q
 
@@ -85,3 +86,81 @@ def test_pick_level():
     z_small = Q.pick_level_for_bbox(np.array([0.01]), np.array([0.01]))
     assert z_big < z_small
     assert 0 <= z_big <= Q.MAX_LEVEL and z_small <= Q.MAX_LEVEL
+
+
+# ------------------------------------------------------------------
+# build-side cells in Catalyst (index.udfs.explode_bbox_cells)
+# ------------------------------------------------------------------
+
+NAN, INF = float("nan"), float("inf")
+BBOXES = [
+    (-10.0, -5.0, 20.0, 15.0),  # normal
+    (10.0, 10.0, 10.0, 10.0),  # degenerate point
+    (-180.0, -90.0, 180.0, 90.0),  # the full world
+    (170.0, -100.0, 200.0, -80.0),  # lon > 180, lat < -90
+    (20.0, 0.0, 10.0, 5.0),  # inverted in x
+    (20.0, 5.0, 10.0, 0.0),  # inverted in both axes
+    (None, 0.0, 1.0, 1.0),
+    (0.0, None, 1.0, 1.0),
+    (NAN, 0.0, 1.0, 1.0),
+    (0.0, NAN, 1.0, 1.0),
+    (0.0, 0.0, INF, 1.0),
+    (-INF, 0.0, 1.0, 1.0),
+]
+
+
+def _bbox_df(spark, bboxes):
+    return spark.createDataFrame(
+        [(i, *b) for i, b in enumerate(bboxes)],
+        "id long, bbox_xmin double, bbox_ymin double, bbox_xmax double, bbox_ymax double",
+    )
+
+
+def _expected_cells(bbox, z):
+    """Q.cells_of_bbox, or no cells when a coordinate is null or not
+    finite."""
+    if not all(v is not None and np.isfinite(v) for v in bbox):
+        return []
+    return Q.cells_of_bbox(*bbox, z).tolist()
+
+
+@pytest.mark.parametrize("z", [0, 3, 5])
+def test_explode_bbox_cells_matches_cells_of_bbox(spark, z):
+    from pythongis_spark.index import udfs as IU
+
+    got: dict[int, list[int]] = {}
+    for r in IU.explode_bbox_cells(_bbox_df(spark, BBOXES), z).select("id", "cell").collect():
+        got.setdefault(r["id"], []).append(r["cell"])
+    for i, bbox in enumerate(BBOXES):
+        # same cells in the same (tx-major) order
+        assert got.get(i, []) == _expected_cells(bbox, z), (bbox, z)
+
+
+def test_explode_bbox_cells_plans_no_python(spark):
+    from pythongis_spark.index import udfs as IU
+
+    plan = IU.explode_bbox_cells(_bbox_df(spark, BBOXES), 4)._jdf.queryExecution().executedPlan().toString()
+    assert "Generate explode(" in plan
+    assert "EvalPython" not in plan
+
+
+def test_bbox_cell_count_closed_form(spark):
+    """The per-level cell total summed from the count expression is the
+    row count of the explode, over every bbox kind above."""
+    from pyspark.sql import functions as F
+
+    from pythongis_spark.index import udfs as IU
+
+    df = _bbox_df(spark, BBOXES)
+    for z in range(9):
+        total = df.agg(F.sum(IU.bbox_cell_count_expr(z))).first()[0]
+        assert total == IU.explode_bbox_cells(df, z).count() > 0, z
+
+
+def test_explode_bbox_cells_cap_raises(spark):
+    from pythongis_spark.index import udfs as IU
+
+    # the full world covers 4^9 = 262144 level-9 cells
+    world = _bbox_df(spark, [(-180.0, -90.0, 180.0, 90.0)])
+    with pytest.raises(Exception, match=f"cap {IU.MAX_CELLS_PER_FEATURE}"):
+        IU.explode_bbox_cells(world, 9).collect()

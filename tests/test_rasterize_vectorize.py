@@ -348,19 +348,6 @@ def test_cover_runs_row_blocks_do_not_change_result(monkeypatch):
 # broadcast build side
 # ------------------------------------------------------------------
 
-@pytest.fixture
-def pcache(monkeypatch):
-    import collections
-
-    from pythongis_spark import plan_cache
-
-    cache = collections.OrderedDict()
-    monkeypatch.setattr(plan_cache, "_ENTRIES", cache)
-    yield cache
-    for _, facts in cache.values():
-        plan_cache._release(facts)
-
-
 def _zone_layer(spark, x0):
     return spark.createDataFrame(
         pd.DataFrame({"zone_id": [x0], "geom": [_rect(x0, 0, x0 + 3, 3)]})
@@ -408,11 +395,14 @@ def _pip_call(spark):
 
 
 # kind -> (call(spark) -> run(zones) planning (zone_id, count, sum) rows,
-#          memoized sizing-count fact, its value for _zone_layer(spark, 0))
+#          facts -> memoized sizing count, its value for _zone_layer(spark, 0))
 CACHED = {
-    "zone_cells": (_zonal_call, "zone_cells.count", 9),
-    # the 3 x 3 degree rect spans 3 x 6 level-8 index cells
-    "pip_build": (_pip_call, ("cells", PIP_Z, 4096), 18),
+    "zone_cells": (_zonal_call, lambda facts: facts["zone_cells.count"], 9),
+    # the 3 x 3 degree rect spans 3 x 6 level-8 index cells: the layer
+    # profile's cell total at PIP_Z
+    "pip_build": (
+        _pip_call, lambda facts: facts[("profile", "geom", 4096)].cells[PIP_Z], 18
+    ),
 }
 
 
@@ -429,7 +419,7 @@ def test_plan_cache_hit_reuses_frame_and_count(spark, pcache, monkeypatch, kind)
     first = run(zones).collect()
     [(key, (_, facts))] = pcache.items()
     frame = _frame(facts)
-    assert facts[count_fact] == n_cells
+    assert count_fact(facts) == n_cells
     counted = []
     orig = type(frame).count
     monkeypatch.setattr(type(frame), "count", lambda df: counted.append(df) or orig(df))

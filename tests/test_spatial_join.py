@@ -55,6 +55,23 @@ def test_pip_join_matches_bruteforce(spark, zones, points):
     assert len(pairs) > 100  # sanity: join actually matched things
 
 
+def test_pip_giant_polygon_takes_nested_loop_leg(spark, zones, points):
+    """A polygon covering more than DEFAULT_CELL_CAP level-8 cells joins
+    through the broadcast nested-loop leg; the pairs stay exact."""
+    x0, y0, x1, y1 = -170.0, -80.0, 170.0, 80.0
+    giant = zones.limit(1).toPandas().assign(
+        zone_id=999,
+        geom=[W.wkb_polygon(np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]))],
+        bbox_xmin=x0, bbox_ymin=y0, bbox_xmax=x1, bbox_ymax=y1,
+    )
+    layer = zones.unionByName(spark.createDataFrame(giant, zones.schema))
+    expected = brute_force_pip(points.toPandas(), layer.toPandas())
+    got = point_in_polygon_join(points, layer, point_id="point_id", z=8)
+    pairs = {(r["point_id"], r["zone_id"]) for r in got.select("point_id", "zone_id").collect()}
+    assert pairs == expected
+    assert any(zid == 999 for _, zid in pairs)
+
+
 def test_pip_join_salted_equals_broadcast(spark, zones, points):
     """Salted shuffle path must produce the identical pair set."""
     base = point_in_polygon_join(points, zones, point_id="point_id")
@@ -590,3 +607,75 @@ def test_is_bbox_rect_rejects_bowtie(spark):
     df = spark.createDataFrame(pd.DataFrame({"geom": [rect, bowtie]}))
     got = [r[0] for r in df.select(st_is_bbox_rect("geom")).collect()]
     assert got == [True, False]
+
+
+# ------------------------------------------------------------------
+# plan-time facts: one profile aggregate per layer
+# ------------------------------------------------------------------
+
+def _plan_actions(spark, run) -> int:
+    """SQL executions started by ``run()``, plus each job outside any —
+    the way the benchmark counts plan-time actions."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-actions-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters
+    store = spark._jsparkSession.sharedState().statusStore()
+    execution_of = {
+        int(job): int(ex.executionId())
+        for ex in conv.asJava(store.executionsList())
+        for job in conv.asJava(ex.jobs()).keySet()
+    }
+    jobs = sc.statusTracker().getJobIdsForGroup(group) or []
+    return len({execution_of.get(j, ("job", j)) for j in jobs})
+
+
+def test_join_planning_runs_one_profile_job_per_layer(spark, points, pcache):
+    zones = spark.createDataFrame(FX.golden_zones_pdf(40))  # not all rectangles
+
+    def pip():
+        point_in_polygon_join(points, zones, point_id="point_id")
+
+    assert _plan_actions(spark, pip) == 1
+    assert _plan_actions(spark, pip) == 0
+    left = spark.createDataFrame(FX.golden_zones_pdf(30, seed=3))
+    right = spark.createDataFrame(FX.golden_zones_pdf(20, seed=4))
+    assert _plan_actions(spark, lambda: spatial_join(left, right, left_id="zone_id")) <= 2
+
+
+def test_layer_profile_facts(spark, pcache):
+    """The profile's level is pick_level's, its per-level cell total is
+    the explode's row count within the cap, and its giant flag marks the
+    levels where some feature exceeds the cap."""
+    import importlib
+
+    from pythongis_spark.index import quadkey as Q
+    from pythongis_spark.index import udfs as IU
+
+    SJ = importlib.import_module("pythongis_spark.operators.spatial_join")
+    zones = spark.createDataFrame(FX.golden_zones_pdf(30))
+    cap = 64
+    prof = SJ._profile(zones, "geom", cap)
+    assert prof.z == IU.pick_level(zones)
+    assert not prof.all_rect
+    n = IU.bbox_cell_count_expr
+    for z in range(8):
+        within = zones.filter(n(z) <= cap)
+        assert prof.cells[z] == IU.explode_bbox_cells(within, z).count(), z
+        assert prof.giants[z] == (zones.filter(n(z) > cap).count() > 0), z
+    assert len(prof.cells) == len(prof.giants) == Q.MAX_LEVEL + 1
+    assert prof.giants[Q.MAX_LEVEL] and not prof.giants[0]
+    # the fact is memoized: the same object comes back
+    assert SJ._profile(zones, "geom", cap) is prof
+    # an empty layer: nothing to refine, so every geometry is a rectangle
+    empty = SJ._profile(zones.limit(0), "geom", cap)
+    assert empty.all_rect and not any(empty.giants) and not any(empty.cells)
+    assert SJ._profile(FX.oracle_zones(spark), "geom", cap).all_rect

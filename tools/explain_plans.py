@@ -71,6 +71,21 @@ def main():
         must_not=[r"SortMergeJoin", r"_refine_pip"],
     )
 
+    # 1b. pip over golden (non-rectangle) zones: the build side's cells
+    # come from a Catalyst explode(sequence) over each bbox's tile spans,
+    # so the only Python in the plan is the exact ray-cast refine
+    gz = spark.createDataFrame(FX.golden_zones_pdf())
+    gpip = point_in_polygon_join(pts, gz, point_id="event_id", z=6, build_rows=0)
+    plan = fmt(gpip)
+    udfs = re.findall(r"\(\d+\) ArrowEvalPython\n(?:.*\n)*?Arguments: \[(\w+)\(", plan)
+    expand = re.search(r"\(\d+\) Generate.*\n[^(]*?Arguments: explode\(sequence\(", plan)
+    ok1b = udfs == ["_refine_pip"] and expand is not None
+    if not ok1b:
+        print(f"  ArrowEvalPython UDFs = {udfs} (want ['_refine_pip']); "
+              f"Generate explode(sequence) present: {expand is not None}")
+    print(f"pip_build_catalyst: {'OK' if ok1b else 'PLAN REGRESSION'}")
+    failures += not ok1b
+
     # 2. tile assignment: pure codegen, no python eval
     tiles = pts.select(
         "event_id", IU.point_cell_expr(F.col("lon"), F.col("lat"), 8).alias("tile")
