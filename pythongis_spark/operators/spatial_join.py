@@ -200,10 +200,7 @@ def _geom_equals(ga, gb) -> bool:
 # ------------------------------------------------------------------
 
 def _prefix(df: DataFrame, prefix: str, exclude=()) -> DataFrame:
-    for c in df.columns:
-        if c not in exclude:
-            df = df.withColumnRenamed(c, prefix + c)
-    return df
+    return df.withColumnsRenamed({c: prefix + c for c in df.columns if c not in exclude})
 
 
 class _Profile(NamedTuple):

@@ -23,7 +23,7 @@ def main():
     from pythongis_spark.operators.spatial_join import point_in_polygon_join
     from pythongis_spark.session import get_spark
 
-    spark = get_spark(app="skew", cores=32, shuffle_partitions=32)
+    spark = get_spark(app="skew", shuffle_partitions=32)
     spark.range(1000).count()
     # hotspot points, metadata only (no image bytes needed for the join)
     ids = spark.range(N).select(F.col("id"))
@@ -71,6 +71,7 @@ def main():
     hb = b.select(hsum.alias("h")).first()["h"]
     summary = {
         "n_points": N,
+        "cores": spark.sparkContext.defaultParallelism,
         "hotspot": "20% of rows in one 1x1-degree cell",
         "naive": naive,
         "salted": salted,
@@ -82,7 +83,8 @@ def main():
 ## Skew handling (explicit hot-cell salting)
 
 Hotspot distribution: {N} points, 20% concentrated in one 1°×1° cell
-(≫ any z=6 cell), forced through the *shuffle* join path:
+(≫ any z=6 cell), forced through the *shuffle* join path on
+local[{summary['cores']}]:
 
 | path | wall (s) | rows |
 |---|---|---|
