@@ -32,7 +32,11 @@ def main(argv=None):
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName("image_pipeline").getOrCreate()
+    from pythongis_spark.session import worker_conf
+
+    # no master here: spark-submit's --master rules; the worker conf spares
+    # every Python task a re-read of the zips on the worker path
+    spark = SparkSession.builder.appName("image_pipeline").config(map=worker_conf()).getOrCreate()
 
     from pythongis_spark import fixtures as FX
     from pythongis_spark import lineage as L

@@ -49,9 +49,6 @@ def _cover_fraction(g, rd: RasterDef, x: int, y: int) -> float:
     return min(1.0, covered / cell_area) if cell_area > 0 else 0.0
 
 
-DEFAULT_COVER_CELL_CAP = 262_144  # max cells one UDF row may emit (512²)
-
-
 def _grid_bbox(g, rd: RasterDef):
     """Clamped cell-index bbox (x0, x1, y0, y1) of a geometry, or None
     when it misses the grid."""
@@ -70,63 +67,28 @@ def _grid_bbox(g, rd: RasterDef):
     return x0, x1, y0, y1
 
 
-def _window_bounds(wx0, wx1, wy0, wy1, i):
-    w = (
-        None
-        if wx0 is None or wx0.iloc[i] is None or pd.isna(wx0.iloc[i])
-        else (int(wx0.iloc[i]), int(wx1.iloc[i]), int(wy0.iloc[i]), int(wy1.iloc[i]))
-    )
-    return w
-
-
-def _cover_weights_udf(rd: RasterDef):
-    """pandas UDF: (geometry WKB, window bounds) → array of (x, y, w)
-    where w is the covered fraction of the cell — the ``partial``
-    rasterize mode (border cells included with fractional weight;
-    interior cells 1.0). Cover set = every cell with fraction > 0 (the
-    reference burns feature outlines to find border cells,
-    ``manager.py:915-921``). Window bounds (from ``_window_split``)
-    restrict evaluation so a giant feature never materializes the whole
-    grid in one task; per-cell fractions are independent, so windowing
-    is exact."""
-
-    @F.pandas_udf("array<struct<x:int,y:int,w:double>>")
-    def coverw(geom: pd.Series, wx0: pd.Series, wx1: pd.Series,
-               wy0: pd.Series, wy1: pd.Series) -> pd.Series:
-        out = []
-        for i, blob in enumerate(geom.to_numpy(object)):
-            if blob is None:
-                out.append(None)
-                continue
-            g = W.decode_wkb(bytes(blob))
-            t = g[0]
-            if t not in ("Polygon", "MultiPolygon"):
-                raise ValueError("partial rasterize needs polygonal features")
-            bb = _grid_bbox(g, rd)
-            if bb is None:
-                out.append([])
-                continue
-            x0, x1, y0, y1 = bb
-            win = _window_bounds(wx0, wx1, wy0, wy1, i)
-            if win is not None:
-                x0, x1 = max(x0, win[0]), min(x1, win[1])
-                y0, y1 = max(y0, win[2]), min(y1, win[3])
-            cells = []
-            for cx in range(x0, x1 + 1):
-                for cy in range(y0, y1 + 1):
-                    w = _cover_fraction(g, rd, cx, cy)
-                    if w > 0.0:
-                        cells.append({"x": cx, "y": cy, "w": float(w)})
-            out.append(cells)
-        return pd.Series(out, index=geom.index)
-
-    return coverw
-
-
-# element budget of one (rows × edges) crossing matrix or one block of
-# line-distance cell centres: the size of one partial-cover window
-# (DEFAULT_COVER_CELL_CAP), so no feature allocates more than that
+# element budget of one (rows × edges) crossing matrix, one (rows ×
+# columns) partial-cover mask or one block of line-distance cell centres,
+# so no feature allocates more than that at once, whatever its size
 _SCAN_BLOCK_ELEMS = 1 << 18
+
+
+def _mask_runs(mask: np.ndarray):
+    """Runs of True along the rows of a 2-D mask: (row, first column,
+    end column) arrays, end exclusive."""
+    edge = np.diff(np.pad(mask.astype(np.int8), ((0, 0), (1, 1))), axis=1)
+    rs, cs = np.nonzero(edge == 1)
+    _, ce = np.nonzero(edge == -1)
+    return rs, cs, ce
+
+
+def _span_mask(shape, rows, starts, ends) -> np.ndarray:
+    """(rows × columns) mask of the union of half-open column spans
+    ``[starts, ends)`` on ``rows``."""
+    d = np.zeros((shape[0], shape[1] + 1), np.int32)
+    np.add.at(d, (rows, starts), 1)
+    np.add.at(d, (rows, ends), -1)
+    return np.cumsum(d[:, :-1], axis=1) > 0
 
 
 def _polygon_intervals(g, gx: np.ndarray, gy: np.ndarray):
@@ -178,10 +140,7 @@ def _line_intervals(g, rd: RasterDef, gx: np.ndarray, gy: np.ndarray):
     for r0 in range(0, len(gy), step):
         my, mx = np.meshgrid(gy[r0 : r0 + step], gx, indexing="ij")
         d = G.points_to_geom_dist(mx.ravel(), my.ravel(), g)
-        inside = (d <= 0.5 * abs(rd.xscale)).reshape(mx.shape)
-        edge = np.diff(np.pad(inside.astype(np.int8), ((0, 0), (1, 1))), axis=1)
-        rs, cs = np.nonzero(edge == 1)
-        _, ce = np.nonzero(edge == -1)
+        rs, cs, ce = _mask_runs((d <= 0.5 * abs(rd.xscale)).reshape(mx.shape))
         rows.append(r0 + rs)
         starts.append(cs)
         ends.append(ce)
@@ -251,101 +210,128 @@ def _cover_cells_udf(rd: RasterDef):
     return cover
 
 
-def _bbox_struct_udf(rd: RasterDef):
-    """pandas UDF: geometry WKB → clamped cell-bbox struct (null when
-    the geometry misses the grid) — the cheap sizing pass feeding
-    ``_window_split`` (``partial`` cover only)."""
+def _partial_intervals(g, rd: RasterDef):
+    """``partial`` cover of one decoded polygon as grid-row runs
+    ``(y, x0, x1, w)`` arrays, x1 inclusive (Raster Intervals, SIGMOD
+    2023).
 
-    @F.pandas_udf("struct<x0:int,x1:int,y0:int,y1:int>")
-    def bbox(geom: pd.Series) -> pd.DataFrame:
-        rows = []
+    Border cells are the columns each ring edge's x-extent reaches inside
+    a row strip: one-cell runs weighted by ``_cover_fraction`` on the
+    whole geometry (zero-weight ones dropped). No edge enters the cells
+    between them, so each of those is wholly inside or wholly outside
+    every part: the ones whose centre is inside some part (that part's
+    own even-odd parity, as ``_cover_fraction`` sums parts) form runs of
+    weight exactly 1.0, and the rest (outside, or inside a hole) are
+    dropped — where the per-cell clip reads 1 or 0 only up to rounding.
+    A column index that rounding shifts misses a cell by less than an
+    ulp, so that cell, too, is whole up to rounding; the border is not
+    widened, which would bring the rounding back on its neighbours.
+    Rings are closed first, as ``G.clip_ring_to_rect`` closes them."""
+    if g[0] not in ("Polygon", "MultiPolygon"):
+        raise ValueError("partial rasterize needs polygonal features")
+    bb = _grid_bbox(g, rd)
+    if bb is None:
+        empty = np.zeros(0, dtype=int)
+        return empty, empty, empty, np.zeros(0)
+    x0, x1, y0, y1 = bb
+    parts = [
+        ("Polygon", [r if np.array_equal(r[0], r[-1]) else np.vstack([r, r[:1]])
+                     for r in rings])
+        for rings in W.iter_polygons(g)
+    ]
+    rings = [r for _, part in parts for r in part]
+    a = np.concatenate([r[:-1] for r in rings])
+    b = np.concatenate([r[1:] for r in rings])
+    ax, ay, bx, by = a[:, 0], a[:, 1], b[:, 0], b[:, 1]
+    ey0, ey1, dy = np.minimum(ay, by), np.maximum(ay, by), by - ay
+    ncol = x1 - x0 + 1
+    gx = rd.xoffset + (np.arange(x0, x1 + 1) + 0.5) * rd.xscale
+    ys = np.arange(y0, y1 + 1)
+    gy = rd.yoffset + (ys + 0.5) * rd.yscale
+    # row strips, from the same expressions as _cover_fraction's cell rects
+    ya, yb = rd.yoffset + ys * rd.yscale, rd.yoffset + (ys + 1) * rd.yscale
+    lo, hi = np.minimum(ya, yb), np.maximum(ya, yb)
+    step = max(1, _SCAN_BLOCK_ELEMS // max(len(ax), ncol))
+    out = []
+    for r0 in range(0, len(ys), step):
+        n = len(lo[r0 : r0 + step])
+        ri, ei = np.nonzero((ey0 <= hi[r0 : r0 + step, None])
+                            & (ey1 >= lo[r0 : r0 + step, None]))
+        # the edge's parameter range inside the strip (a horizontal edge
+        # lies in it whole), then its columns there
+        flat = dy[ei] == 0
+        with np.errstate(divide="ignore", invalid="ignore"):
+            ta = np.where(flat, 0.0, np.clip((lo[r0 + ri] - ay[ei]) / dy[ei], 0.0, 1.0))
+            tb = np.where(flat, 1.0, np.clip((hi[r0 + ri] - ay[ei]) / dy[ei], 0.0, 1.0))
+        ca = np.floor((ax[ei] + ta * (bx[ei] - ax[ei]) - rd.xoffset) / rd.xscale)
+        cb = np.floor((ax[ei] + tb * (bx[ei] - ax[ei]) - rd.xoffset) / rd.xscale)
+        c0 = (np.maximum(np.minimum(ca, cb), x0) - x0).astype(int)
+        c1 = (np.minimum(np.maximum(ca, cb), x1) - x0).astype(int)
+        k = c0 <= c1
+        border = _span_mask((n, ncol), ri[k], c0[k], c1[k] + 1)
+        spans = [_polygon_intervals(p, gx if rd.xscale > 0 else gx[::-1],
+                                    gy[r0 : r0 + step]) for p in parts]
+        r, s, e = (np.concatenate(c) for c in zip(*spans))
+        if rd.xscale < 0:
+            # spans of the reversed row map back to [ncol - e, ncol - s)
+            s, e = ncol - e, ncol - s
+        rs, cs, ce = _mask_runs(_span_mask((n, ncol), r, s, e) & ~border)
+        out.append((r0 + rs, cs, ce - 1, np.ones(len(rs))))
+        br, bc = np.nonzero(border)
+        w = np.array([_cover_fraction(g, rd, x0 + j, y0 + r0 + i)
+                      for i, j in zip(br.tolist(), bc.tolist())])
+        pos = w > 0.0
+        out.append((r0 + br[pos], bc[pos], bc[pos], w[pos]))
+    y, s, e, w = (np.concatenate(c) for c in zip(*out))
+    return y0 + y, x0 + s, x0 + e, w
+
+
+def _cover_weights_udf(rd: RasterDef):
+    """pandas UDF: polygon WKB → array of ``partial`` cover runs
+    ``(y, x0, x1, w)`` (x1 inclusive; see ``_partial_intervals``): each
+    border cell is its own run weighted by the covered fraction of the
+    cell, the cells between them are runs of weight 1.0. The cover set is
+    every cell with fraction > 0 (the reference burns feature outlines to
+    find border cells, ``manager.py:915-921``)."""
+
+    @F.pandas_udf("array<struct<y:int,x0:int,x1:int,w:double>>")
+    def coverw(geom: pd.Series) -> pd.Series:
+        out = []
         for blob in geom.to_numpy(object):
             if blob is None:
-                rows.append((None, None, None, None))
+                out.append(None)
                 continue
-            bb = _grid_bbox(W.decode_wkb(bytes(blob)), rd)
-            rows.append(bb if bb is None else (bb[0], bb[1], bb[2], bb[3]))
-        return pd.DataFrame(
-            [(None, None, None, None) if r is None else r for r in rows],
-            columns=["x0", "x1", "y0", "y1"], index=geom.index,
-        )
+            y, x0, x1, w = _partial_intervals(W.decode_wkb(bytes(blob)), rd)
+            out.append(
+                [
+                    {"y": a, "x0": b, "x1": c, "w": d}
+                    for a, b, c, d in zip(y.tolist(), x0.tolist(), x1.tolist(), w.tolist())
+                ]
+            )
+        return pd.Series(out, index=geom.index)
 
-    return bbox
-
-
-def _window_split(vector: DataFrame, rd: RasterDef, geom: str,
-                  cell_cap: int) -> DataFrame:
-    """Explode each feature into (feature × tile-window) rows so no
-    single ``partial`` cover-UDF invocation evaluates more than
-    ~``cell_cap`` cells — the giant-feature guard (same failure mode
-    ``spatial_join``'s ``cell_cap`` nested-loop split fixes,
-    ``spatial_join.py:253``).
-    Windows partition the feature's cell bbox, so the union of windowed
-    cover sets equals the unwindowed cover set with no duplicates.
-    Adds columns ``_wx0.._wy1`` (window bounds) and drops features that
-    miss the grid entirely."""
-    import math
-
-    tile = max(1, int(math.isqrt(max(1, cell_cap))))
-    bb = _bbox_struct_udf(rd)
-    v = vector.withColumn("_bb", bb(F.col(geom))).filter(
-        F.col("_bb.x0").isNotNull()
-    )
-    nxw = F.floor((F.col("_bb.x1") - F.col("_bb.x0")) / tile) + 1
-    nyw = F.floor((F.col("_bb.y1") - F.col("_bb.y0")) / tile) + 1
-    v = v.withColumn(
-        "_w", F.explode(F.sequence(F.lit(0), (nxw * nyw - 1).cast("int")))
-    )
-    wx0 = (F.col("_bb.x0") + F.pmod(F.col("_w"), nxw) * tile).cast("int")
-    wy0 = (F.col("_bb.y0") + F.floor(F.col("_w") / nxw) * tile).cast("int")
-    return (
-        v.withColumn("_wx0", wx0)
-        .withColumn("_wx1", F.least(F.col("_bb.x1"), wx0 + F.lit(tile - 1)).cast("int"))
-        .withColumn("_wy0", wy0)
-        .withColumn("_wy1", F.least(F.col("_bb.y1"), wy0 + F.lit(tile - 1)).cast("int"))
-        .drop("_bb", "_w")
-    )
+    return coverw
 
 
 def cover_cells(vector: DataFrame, rd: RasterDef, geom: str = "geom",
-                partial: bool = False,
-                cell_cap: int = DEFAULT_COVER_CELL_CAP) -> DataFrame:
+                partial: bool = False) -> DataFrame:
     """Feature → covered-cell rows: all of ``vector``'s columns (minus
     the geometry) plus ``x``, ``y`` (and ``w`` when ``partial``). This is
     the shared front end of rasterize / zonal_statistics / disperse.
 
-    Centre rule: one Python pass returns each feature's grid-row runs
-    ``(y, x0, x1)``; Catalyst expands them with
-    ``explode(sequence(x0, x1))``, at most one grid row of cells per
-    run, so no feature is ever materialized as per-cell Python objects.
-    ``partial``: per-cell fractional weights cannot be runs, so the
-    giant-feature window split (``cell_cap``) bounds each UDF row
-    instead."""
+    One Python pass returns each feature's grid-row runs — ``(y, x0, x1)``
+    under the centre rule (``_cover_cells_udf``), ``(y, x0, x1, w)`` for
+    ``partial`` (``_cover_weights_udf``) — and Catalyst expands them with
+    ``explode(sequence(x0, x1))``, at most one grid row of cells per run,
+    so no feature is ever materialized as per-cell Python objects."""
     keep = [F.col(c) for c in vector.columns if c != geom]
-    if not partial:
-        runs = vector.withColumn("_iv", F.explode(_cover_cells_udf(rd)(F.col(geom))))
-        return runs.select(
-            *keep,
-            F.explode(F.sequence(F.col("_iv.x0"), F.col("_iv.x1"))).alias("x"),
-            F.col("_iv.y").alias("y"),
-        )
-    udf = _cover_weights_udf(rd)
-    if rd.width * rd.height <= cell_cap:
-        # no feature can exceed the cap on this grid — skip the split
-        # stage entirely (its extra ArrowEvalPython pass costs real wall
-        # time on small grids and buys nothing)
-        nul = F.lit(None).cast("int")
-        cov = udf(F.col(geom), nul, nul, nul, nul)
-        exploded = vector.withColumn("_cov", F.explode(cov))
-    else:
-        split = _window_split(vector, rd, geom, cell_cap)
-        cov = udf(
-            F.col(geom), F.col("_wx0"), F.col("_wx1"), F.col("_wy0"), F.col("_wy1")
-        )
-        exploded = split.withColumn("_cov", F.explode(cov))
-    return exploded.select(
-        *keep, F.col("_cov.x").alias("x"), F.col("_cov.y").alias("y"),
-        F.col("_cov.w").alias("w"),
+    udf = _cover_weights_udf(rd) if partial else _cover_cells_udf(rd)
+    runs = vector.withColumn("_iv", F.explode(udf(F.col(geom))))
+    return runs.select(
+        *keep,
+        F.explode(F.sequence(F.col("_iv.x0"), F.col("_iv.x1"))).alias("x"),
+        F.col("_iv.y").alias("y"),
+        *([F.col("_iv.w").alias("w")] if partial else []),
     )
 
 
@@ -362,9 +348,10 @@ def rasterize(
     """Burn vector features into the grid
     (``pythongis/raster/manager.py:790-974``).
 
-    Physical plan: one ArrowEvalPython (the cover UDF: per-feature
-    grid-row runs) → ``Generate explode(sequence(x0, x1))`` into cells
-    in Catalyst → per-cell aggregate.``stat='last'`` reproduces the reference's paint
+    Physical plan, for both cover rules: one ArrowEvalPython (the cover
+    UDF: per-feature grid-row runs) → ``Generate explode(sequence(x0,
+    x1))`` into cells in Catalyst → per-cell aggregate. ``stat='last'``
+    reproduces the reference's paint
     order (last feature wins) using ``order_col`` as paint sequence;
     other stats (sum/mean/count/min/max/majority/minority) match the
     valuekey+stat mode (``manager.py:933-972``).
@@ -374,8 +361,9 @@ def rasterize(
     declarative form of the reference's ``priority`` chooser callable,
     ``manager.py:952-955``). ``partial=True``: border cells weight each
     feature's value by the covered fraction of the cell
-    (``manager.py:958-962``); the cover set then includes every cell the
-    feature touches, not just center-covered ones.
+    (``manager.py:958-962``) and wholly covered cells by exactly 1.0; the
+    cover set then includes every cell the feature touches, not just
+    center-covered ones, and no cell wholly inside a hole.
     Returns a cell table (x, y, band=0, val).
     """
     val = F.col(valuekey) if valuekey else F.lit(1.0)

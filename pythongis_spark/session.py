@@ -36,6 +36,16 @@ def with_worker_dir(pythonpath: str | None) -> str:
     return os.pathsep.join(parts if WORKER_DIR in parts else parts + [WORKER_DIR])
 
 
+def worker_conf(pythonpath: str | None = None) -> dict[str, str]:
+    """Spark conf that runs Python tasks under ``WORKER_MODULE``: the module
+    name and ``spark.executorEnv.PYTHONPATH`` = ``pythonpath`` (kept) plus
+    ``WORKER_DIR``. For any session builder, e.g. a spark-submit job's."""
+    return {
+        "spark.python.worker.module": WORKER_MODULE,
+        "spark.executorEnv.PYTHONPATH": with_worker_dir(pythonpath),
+    }
+
+
 def get_spark(
     app: str = "pythongis_spark",
     cores: int | None = None,
@@ -64,13 +74,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
-        .config("spark.python.worker.module", WORKER_MODULE)
     )
     extra_conf = dict(extra_conf or {})
-    env_path = "spark.executorEnv.PYTHONPATH"
-    extra_conf[env_path] = with_worker_dir(extra_conf.get(env_path))
-    for k, v in extra_conf.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+    conf = worker_conf(extra_conf.pop("spark.executorEnv.PYTHONPATH", None))
+    spark = b.config(map={**conf, **extra_conf}).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark

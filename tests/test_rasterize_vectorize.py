@@ -171,46 +171,35 @@ def test_distance_raster_anisotropic(spark):
     assert out[(3, 4)] == pytest.approx(np.hypot(6.0, 4.0))
 
 
-def test_giant_feature_window_split(spark):
-    """A polygon covering the whole grid: the partial cover must be split
-    into tile windows before its UDF — no single UDF row may evaluate the
-    full grid (the 100TB giant-feature guard) — while the centre-rule
-    cover emits at most one run per grid row and needs no split. Both
-    must give every cell exactly once."""
-    import numpy as np
-    from pythongis_spark.geometry import wkb as W
+def test_giant_feature_runs_cover_full_grid(spark):
+    """A polygon covering the whole grid: both cover rules emit at most
+    one run per grid row, and expanding them gives every cell exactly
+    once (partial: every weight exactly 1.0)."""
     from pythongis_spark.raster import zonal as Z
-    from pythongis_spark.raster.model import RasterDef
 
     rd = RasterDef(width=360, height=180,
                    affine=(1.0, 0.0, -180.0, 0.0, -1.0, 90.0))
     ring = np.array([[-200, -100], [200, -100], [200, 100], [-200, 100],
                      [-200, -100]], dtype=float)
-    import pandas as pd
-    pdf = pd.DataFrame({"zid": [7], "geom": [W.wkb_polygon(ring)]})
-    df = spark.createDataFrame(pdf)
-
-    # with a small cap, the split must produce many windows
-    split = Z._window_split(df, rd, "geom", cell_cap=1024)  # tile=32
-    n_windows = split.count()
-    assert n_windows == (360 // 32 + (360 % 32 > 0)) * (180 // 32 + (180 % 32 > 0))
-    # centre-rule cover (row runs, no window split) == full grid, no dups
-    cells = Z.cover_cells(df, rd, "geom", cell_cap=1024)
+    df = spark.createDataFrame(
+        pd.DataFrame({"zid": [7], "geom": [W.wkb_polygon(ring)]})
+    )
+    g = W.decode_wkb(W.wkb_polygon(ring))
+    assert len(Z._cover_intervals(g, rd)[0]) <= rd.height
+    assert len(Z._partial_intervals(g, rd)[0]) <= rd.height
+    cells = Z.cover_cells(df, rd, "geom")
     assert cells.count() == 360 * 180
     assert cells.select("x", "y").distinct().count() == 360 * 180
-    # partial mode: interior weights 1.0, count matches too
-    w = Z.cover_cells(df, rd, "geom", partial=True, cell_cap=1024)
-    row = w.agg(F.count("*").alias("n"), F.min("w").alias("mn"),
-                F.max("w").alias("mx")).collect()[0]
-    assert row["n"] == 360 * 180 and row["mn"] == 1.0 and row["mx"] == 1.0
+    w = Z.cover_cells(df, rd, "geom", partial=True)
+    row = w.agg(F.count("*").alias("n"),
+                F.countDistinct("x", "y").alias("cells"),
+                F.min("w").alias("mn"), F.max("w").alias("mx")).collect()[0]
+    assert row["n"] == row["cells"] == 360 * 180
+    assert row["mn"] == 1.0 and row["mx"] == 1.0
 
 
-def test_window_split_small_feature_single_window(spark):
-    import numpy as np
-    import pandas as pd
-    from pythongis_spark.geometry import wkb as W
+def test_small_feature_cover_on_large_grid(spark):
     from pythongis_spark.raster import zonal as Z
-    from pythongis_spark.raster.model import RasterDef
 
     rd = RasterDef(width=360, height=180,
                    affine=(1.0, 0.0, -180.0, 0.0, -1.0, 90.0))
@@ -218,8 +207,10 @@ def test_window_split_small_feature_single_window(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"zid": [1], "geom": [W.wkb_polygon(ring)]})
     )
-    assert Z._window_split(df, rd, "geom", Z.DEFAULT_COVER_CELL_CAP).count() == 1
     assert Z.cover_cells(df, rd, "geom").count() == 100
+    # edges on cell boundaries: the partial cover is the same 100 cells
+    w = [r["w"] for r in Z.cover_cells(df, rd, "geom", partial=True).collect()]
+    assert len(w) == 100 and set(w) == {1.0}
 
 
 # ------------------------------------------------------------------
@@ -319,6 +310,152 @@ def test_cover_cells_matches_per_cell_rule(spark, affine):
         assert want, n
         assert got[n] == want, n
     assert 2 in got["multipoint"].values()  # duplicates stay duplicates
+
+    # partial leg: fractional weights from the same runs
+    weights = _partial_cover(spark, PARTIAL_GEOMS, rd)
+    for n, b in PARTIAL_GEOMS.items():
+        assert _partial_cover_errors(W.decode_wkb(b), rd, weights[n]) == [], n
+    assert not weights["off_grid"]
+    assert set(weights["larger_than_grid"].values()) == {(1.0,)}
+    assert len(weights["larger_than_grid"]) == 100
+    # overlapping parts: union capped at 1, border weights from both
+    assert max(w for (w,) in weights["overlapping_parts"].values()) == 1.0
+
+
+# polygonal cases of the partial cover, in the same [0, 10]² world box
+PARTIAL_GEOMS = {
+    "hole": PARITY_GEOMS["hole"],
+    "overlapping_parts": W.wkb_multipolygon([
+        (_closed((0.4, 0.6), (7.3, 1.1), (5.2, 7.8)), []),
+        (_closed((2.1, 2.3), (9.7, 4.2), (6.4, 9.6)), []),
+    ]),
+    "u_shape": PARITY_GEOMS["u_shape"],
+    # edges on the cell boundaries x = 2, x = 7 and y = 1
+    "cell_edge": W.wkb_polygon(_closed((2, 1), (7, 1), (7, 8), (4.6, 9.3), (2, 8))),
+    # every vertex on a cell corner; the diagonals cross cell corners
+    "corner_vertex": W.wkb_polygon(_closed((5, 1), (9, 5), (5, 9), (1, 5))),
+    "larger_than_grid": W.wkb_polygon(
+        _closed((-3.3, -2.1), (13.2, -1.7), (12.6, 12.4), (-2.8, 11.9))
+    ),
+    "off_grid": W.wkb_polygon(_closed((12, 12), (15, 12), (14, 15))),
+    "unclosed": PARITY_GEOMS["unclosed"],
+}
+
+# a per-cell clip fraction this close to 0 or 1 is rounding on a cell no
+# edge enters
+_WHOLE = 1e-12
+
+
+def _partial_cover(spark, geoms, rd):
+    """name -> {(x, y): (w, ...)} from cover_cells(partial=True)."""
+    from collections import defaultdict
+
+    from pythongis_spark.raster.zonal import cover_cells
+
+    names = list(geoms)
+    df = spark.createDataFrame(
+        pd.DataFrame({"fid": range(len(names)), "geom": list(geoms.values())})
+    )
+    got = {n: defaultdict(tuple) for n in names}
+    for r in cover_cells(df, rd, partial=True).collect():
+        got[names[r["fid"]]][(r["x"], r["y"])] += (r["w"],)
+    return got
+
+
+def _edge_meets(p, q, xmin, ymin, xmax, ymax) -> bool:
+    """Liang–Barsky: does segment pq meet the closed rectangle?"""
+    t0, t1 = 0.0, 1.0
+    d = q - p
+    for pk, qk in ((-d[0], p[0] - xmin), (d[0], xmax - p[0]),
+                   (-d[1], p[1] - ymin), (d[1], ymax - p[1])):
+        if pk == 0:
+            if qk < 0:
+                return False
+        elif pk < 0:
+            t0 = max(t0, qk / pk)
+        else:
+            t1 = min(t1, qk / pk)
+    return t0 <= t1
+
+
+def _partial_cover_errors(g, rd, got) -> list:
+    """Compare a partial cover ``{(x, y): (w, ...)}`` with
+    ``_cover_fraction`` over every bbox cell: one row per cell; a
+    fractional cell carries its per-cell weight bit for bit; a cell whose
+    fraction is 0 or 1 up to ``_WHOLE`` reads exactly 1.0 or is absent,
+    and may carry its per-cell weight only when a ring edge meets it."""
+    from pythongis_spark.raster.zonal import _cover_fraction, _grid_bbox
+
+    rings = [r if np.array_equal(r[0], r[-1]) else np.vstack([r, r[:1]])
+             for r in W.iter_rings(g)]
+    edges = [(r[i], r[i + 1]) for r in rings for i in range(len(r) - 1)]
+    got = dict(got)
+    errors = [("duplicate", k, w) for k, w in got.items() if len(w) != 1]
+    bb = _grid_bbox(g, rd)
+    cells = [] if bb is None else [
+        (x, y) for x in range(bb[0], bb[1] + 1) for y in range(bb[2], bb[3] + 1)
+    ]
+    for x, y in cells:
+        v = _cover_fraction(g, rd, x, y)
+        w = got.pop((x, y), (None,))[0]
+        per_cell = v if v > 0 else None
+        whole = 1.0 if v >= 1 - _WHOLE else None if v < _WHOLE else "fraction"
+        if whole == "fraction" or w not in (per_cell, whole):
+            if w != per_cell:
+                errors.append(("weight", (x, y), v, w))
+            continue
+        xa, xb = sorted((rd.xoffset + x * rd.xscale, rd.xoffset + (x + 1) * rd.xscale))
+        ya, yb = sorted((rd.yoffset + y * rd.yscale, rd.yoffset + (y + 1) * rd.yscale))
+        if w != whole and not any(_edge_meets(p, q, xa, ya, xb, yb) for p, q in edges):
+            errors.append(("not whole", (x, y), v, w))
+    errors += [("outside bbox", k, w) for k, w in got.items()]
+    return errors
+
+
+def _ngon(cx, cy, r, n):
+    t = np.linspace(0, 2 * np.pi, n, endpoint=False)
+    return _closed(*zip(cx + r * np.cos(t), cy + r * np.sin(t)))
+
+
+@pytest.mark.parametrize(
+    "affine",
+    [
+        (1 / 3, 0.0, -180.0, 0.0, -1 / 3, 90.0),
+        (-1 / 3, 0.0, 180.0, 0.0, -1 / 3, 90.0),
+        (1 / 3, 0.0, -180.0, 0.0, 1 / 3, -90.0),
+    ],
+    ids=["north_up", "xscale_neg", "yscale_pos"],
+)
+def test_partial_cover_whole_cells_exact(spark, affine):
+    # on a 1/3° grid the per-cell clip of a wholly covered cell reads
+    # 1 - 1e-14-ish, and of a cell wholly inside a clockwise hole 1e-16-ish:
+    # the runs read exactly 1.0 and drop the hole cells
+    from pythongis_spark.raster.zonal import _cover_fraction, _grid_bbox
+
+    rd = RasterDef(1080, 540, affine)
+    blob = W.wkb_polygon(_ngon(0.3, 0.2, 6.0, 48), [_ngon(0.8, -0.1, 3.5, 12)[::-1]])
+    g = W.decode_wkb(blob)
+    got = _partial_cover(spark, {"holed": blob}, rd)["holed"]
+    assert _partial_cover_errors(g, rd, got) == []
+    x0, x1, y0, y1 = _grid_bbox(g, rd)
+    per_cell = {(x, y): _cover_fraction(g, rd, x, y)
+                for x in range(x0, x1 + 1) for y in range(y0, y1 + 1)}
+    rounded = [k for k, v in per_cell.items() if 1 - _WHOLE <= v < 1.0]
+    residue = [k for k, v in per_cell.items() if 0.0 < v < _WHOLE]
+    assert rounded and residue
+    assert all(got[k] == (1.0,) for k in rounded)
+    assert not any(k in got for k in residue)
+
+
+def test_partial_cover_rejects_lines(spark):
+    from pythongis_spark.raster.zonal import _partial_intervals, cover_cells
+
+    line = PARITY_GEOMS["line"]
+    with pytest.raises(ValueError, match="polygonal"):
+        _partial_intervals(W.decode_wkb(line), RD)
+    df = spark.createDataFrame(pd.DataFrame({"fid": [0], "geom": [line]}))
+    with pytest.raises(Exception, match="partial rasterize needs polygonal"):
+        cover_cells(df, RD, partial=True).collect()
 
 
 def test_cover_runs_split_concave_rows():

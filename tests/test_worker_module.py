@@ -84,6 +84,17 @@ def test_with_worker_dir_merges_existing_entries():
     assert S.with_worker_dir(kept) == kept
 
 
+def test_worker_conf_is_what_sessions_and_jobs_set():
+    env = "spark.executorEnv.PYTHONPATH"
+    assert S.worker_conf() == {"spark.python.worker.module": S.WORKER_MODULE,
+                               env: S.WORKER_DIR}
+    assert S.worker_conf("/a")[env] == S.with_worker_dir("/a")
+    # the spark-submit jobs set no master and build with the helper
+    for job in ("image_pipeline_job.py", "text_pipeline_job.py"):
+        src = open(os.path.join(os.path.dirname(S.__file__), "..", "jobs", job)).read()
+        assert ".config(map=worker_conf())" in src and ".master(" not in src, job
+
+
 def _worker_state():
     """A task function (nested, so it is pickled by value) reporting whether
     its worker imported the worker module and kept its replacement."""

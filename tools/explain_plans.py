@@ -119,26 +119,27 @@ def main():
     plan = fmt(z)
     failures += not check("zonal_stats", plan, must=[r"BroadcastHashJoin", r"HashAggregate"])
 
-    # 5b. rasterize on a grid above the partial cover's window-split cap:
-    # the centre-rule cover is ONE Python pass emitting grid-row runs,
+    # 5b. rasterize on a 1080×540 grid, both cover rules: ONE Python
+    # pass emitting grid-row runs (partial: with their weights),
     # expanded to cells by a Catalyst explode(sequence) — no bbox sizing
     # UDF and no window explode in front of it
     from pythongis_spark.raster.model import RasterDef
-    from pythongis_spark.raster.zonal import DEFAULT_COVER_CELL_CAP, rasterize
+    from pythongis_spark.raster.zonal import rasterize
 
     rd = RasterDef(1080, 540, (1 / 3, 0.0, -180.0, 0.0, -1 / 3, 90.0))
-    assert rd.width * rd.height > DEFAULT_COVER_CELL_CAP
-    rz = rasterize(zones, rd, valuekey="zone_id", stat="sum")
-    plan = fmt(rz)
-    n_arrow = len(re.findall(r"\(\d+\) ArrowEvalPython", plan))
-    # formatted plans list a Generate's generator on its Arguments line
-    expand = re.search(r"\(\d+\) Generate\n[^(]*?Arguments: explode\(sequence\(", plan)
-    ok5b = n_arrow == 1 and expand is not None
-    if not ok5b:
-        print(f"  ArrowEvalPython count = {n_arrow} (want 1); "
-              f"Generate explode(sequence) present: {expand is not None}")
-    print(f"rasterize_intervals: {'OK' if ok5b else 'PLAN REGRESSION'}")
-    failures += not ok5b
+    for label, partial in (("rasterize_intervals", False),
+                           ("rasterize_partial_intervals", True)):
+        rz = rasterize(zones, rd, valuekey="zone_id", stat="sum", partial=partial)
+        plan = fmt(rz)
+        n_arrow = len(re.findall(r"\(\d+\) ArrowEvalPython", plan))
+        # formatted plans list a Generate's generator on its Arguments line
+        expand = re.search(r"\(\d+\) Generate\n[^(]*?Arguments: explode\(sequence\(", plan)
+        ok5b = n_arrow == 1 and expand is not None
+        if not ok5b:
+            print(f"  ArrowEvalPython count = {n_arrow} (want 1); "
+                  f"Generate explode(sequence) present: {expand is not None}")
+        print(f"{label}: {'OK' if ok5b else 'PLAN REGRESSION'}")
+        failures += not ok5b
 
     # 6. classify quantile: the window must be per-range-partition, never
     # a single-partition global window (SinglePartition feeding Window =
