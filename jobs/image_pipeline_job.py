@@ -8,7 +8,9 @@ Usage (local sandbox stand-in for a multi-executor cluster):
         jobs/image_pipeline_job.py \
         --images 60000 --out /tmp/pipeline_out --tile-z 8
 
-On a real cluster only --master/--deploy-mode change; the job is
+On a real cluster only --master/--deploy-mode change (there the Python
+workers are stock pyspark.worker: pythongis_spark's worker module runs
+under a local master only, see session.submitted_worker_conf); the job is
 partition-count agnostic and resumable (re-running with the same --out
 skips completed zone partitions via the checkpoint manifest).
 """
@@ -32,11 +34,13 @@ def main(argv=None):
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from pythongis_spark.session import worker_conf
+    from pythongis_spark.session import submitted_worker_conf
 
-    # no master here: spark-submit's --master rules; the worker conf spares
-    # every Python task a re-read of the zips on the worker path
-    spark = SparkSession.builder.appName("image_pipeline").config(map=worker_conf()).getOrCreate()
+    # no master here: spark-submit's --master rules; with a local master the
+    # worker conf spares every Python task a re-read of the zips on the worker
+    # path, elsewhere it is empty and executors run the stock worker
+    spark = (SparkSession.builder.appName("image_pipeline")
+             .config(map=submitted_worker_conf()).getOrCreate())
 
     from pythongis_spark import fixtures as FX
     from pythongis_spark import lineage as L

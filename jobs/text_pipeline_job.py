@@ -22,7 +22,9 @@ Usage (local sandbox stand-in for a multi-executor cluster):
         jobs/text_pipeline_job.py \
         --sf-dir /root/testdata/sf0.1 --out /tmp/text_pipeline_out
 
-On a real cluster only --master/--deploy-mode change. The job is
+On a real cluster only --master/--deploy-mode change (there the Python
+workers are stock pyspark.worker: pythongis_spark's worker module runs
+under a local master only, see session.submitted_worker_conf). The job is
 resumable: re-running with the same --out skips completed language
 partitions via the lineage manifest (the funnel stages re-derive
 deterministically — every stage is a pure function of the input
@@ -63,11 +65,13 @@ def main(argv=None):
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from pythongis_spark.session import worker_conf
+    from pythongis_spark.session import submitted_worker_conf
 
-    # no master here: spark-submit's --master rules; the worker conf spares
-    # every Python task a re-read of the zips on the worker path
-    spark = SparkSession.builder.appName("text_pipeline").config(map=worker_conf()).getOrCreate()
+    # no master here: spark-submit's --master rules; with a local master the
+    # worker conf spares every Python task a re-read of the zips on the worker
+    # path, elsewhere it is empty and executors run the stock worker
+    spark = (SparkSession.builder.appName("text_pipeline")
+             .config(map=submitted_worker_conf()).getOrCreate())
 
     from pythongis_spark import lineage as L
     from pythongis_spark.operators.dedup import (

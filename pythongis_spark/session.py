@@ -25,7 +25,8 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus())
 # The Python worker module (see its docstring) and the directory that holds
 # it. The daemon imports the module when it starts, before any task has
 # shipped py-files, so the directory goes on the executors' PYTHONPATH. It is
-# derived from this file, so it is also right inside a --py-files zip.
+# derived from this file, so it is also right inside a --py-files zip, but
+# only on the driver's host (see ``worker_conf``).
 WORKER_MODULE = "pyspark_gis_worker"
 WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
 
@@ -36,14 +37,31 @@ def with_worker_dir(pythonpath: str | None) -> str:
     return os.pathsep.join(parts if WORKER_DIR in parts else parts + [WORKER_DIR])
 
 
-def worker_conf(pythonpath: str | None = None) -> dict[str, str]:
+def worker_conf(master: str, pythonpath: str | None = None) -> dict[str, str]:
     """Spark conf that runs Python tasks under ``WORKER_MODULE``: the module
     name and ``spark.executorEnv.PYTHONPATH`` = ``pythonpath`` (kept) plus
-    ``WORKER_DIR``. For any session builder, e.g. a spark-submit job's."""
+    ``WORKER_DIR``. Empty unless ``master`` is local: ``WORKER_DIR`` is a path
+    on the driver, and a daemon on another host that cannot find the module
+    fails every Python task, so executors there keep the stock worker."""
+    if not master.startswith("local"):
+        return {}
     return {
         "spark.python.worker.module": WORKER_MODULE,
         "spark.executorEnv.PYTHONPATH": with_worker_dir(pythonpath),
     }
+
+
+def submitted_worker_conf() -> dict[str, str]:
+    """``worker_conf`` for a builder that sets no master, as a spark-submit
+    job's: for the submitted ``spark.master``, merged into the submitted
+    ``spark.executorEnv.PYTHONPATH``. PySpark shows submitted confs only
+    once the JVM gateway is up, so this starts it (spark-submit already has)."""
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    submitted = SparkConf()
+    return worker_conf(submitted.get("spark.master", ""),
+                       submitted.get("spark.executorEnv.PYTHONPATH"))
 
 
 def get_spark(
@@ -76,7 +94,7 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
     extra_conf = dict(extra_conf or {})
-    conf = worker_conf(extra_conf.pop("spark.executorEnv.PYTHONPATH", None))
+    conf = worker_conf(f"local[{cores}]", extra_conf.pop("spark.executorEnv.PYTHONPATH", None))
     spark = b.config(map={**conf, **extra_conf}).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark

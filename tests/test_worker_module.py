@@ -1,6 +1,7 @@
 """The Python worker module every ``get_spark`` session runs
 (``pythongis_spark/_worker/pyspark_gis_worker.py``)."""
 
+import json
 import os
 import subprocess
 import sys
@@ -86,13 +87,50 @@ def test_with_worker_dir_merges_existing_entries():
 
 def test_worker_conf_is_what_sessions_and_jobs_set():
     env = "spark.executorEnv.PYTHONPATH"
-    assert S.worker_conf() == {"spark.python.worker.module": S.WORKER_MODULE,
-                               env: S.WORKER_DIR}
-    assert S.worker_conf("/a")[env] == S.with_worker_dir("/a")
-    # the spark-submit jobs set no master and build with the helper
+    for master in ("local", "local[4]", "local[*]", "local-cluster[2,1,1024]"):
+        assert S.worker_conf(master) == {"spark.python.worker.module": S.WORKER_MODULE,
+                                         env: S.WORKER_DIR}
+    assert S.worker_conf("local[2]", "/a")[env] == S.with_worker_dir("/a")
+    # WORKER_DIR is a driver path: executors on other hosts keep the stock worker
+    for master in ("spark://h:7077", "yarn", "k8s://https://h:443", "mesos://h:5050", ""):
+        assert S.worker_conf(master, "/a") == {}
+    # the spark-submit jobs set no master and build with the submitted conf
     for job in ("image_pipeline_job.py", "text_pipeline_job.py"):
-        src = open(os.path.join(os.path.dirname(S.__file__), "..", "jobs", job)).read()
-        assert ".config(map=worker_conf())" in src and ".master(" not in src, job
+        src = open(os.path.join(REPO, "jobs", job)).read()
+        assert ".config(map=submitted_worker_conf())" in src and ".master(" not in src, job
+
+
+_SUBMITTED = """
+import json
+from pythongis_spark.session import submitted_worker_conf
+print("CONF " + json.dumps(submitted_worker_conf()))
+"""
+
+
+def test_submitted_worker_conf_follows_spark_submit(tmp_path):
+    """Under spark-submit the jobs' conf follows the submitted master and
+    merges the submitted executor PYTHONPATH (no SparkContext is started,
+    so the standalone master is never contacted)."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    script = tmp_path / "submitted.py"
+    script.write_text(_SUBMITTED)
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable,
+               PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p))
+
+    def submitted(*args):
+        out = subprocess.run(
+            [os.path.join(_find_spark_home(), "bin", "spark-submit"), "--driver-memory", "512m",
+             *args, str(script)],
+            cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-4000:]
+        return json.loads(next(ln[5:] for ln in out.stdout.splitlines() if ln.startswith("CONF ")))
+
+    got = submitted("--master", "local[1]", "--conf", "spark.executorEnv.PYTHONPATH=/kept")
+    assert got == {"spark.python.worker.module": S.WORKER_MODULE,
+                   "spark.executorEnv.PYTHONPATH": S.with_worker_dir("/kept")}
+    assert submitted("--master", "spark://localhost:7077") == {}
 
 
 def _worker_state():
