@@ -424,17 +424,15 @@ def point_in_polygon_join(
             matched.select(F.col(pid)).distinct(), pid, "left_anti"
         )
 
-    # assemble output: drop internal columns; dedupe column names
-    drop_cols = ["cell"] + ["r_" + polygon_geom] + [f"r_{c}" for c in bbox_cols]
-    out = matched.drop(*[c for c in drop_cols if c in matched.columns])
-    # strip r_ prefix unless it collides with a point column
-    for c in out.columns:
-        if c.startswith("r_"):
-            bare = c[2:]
-            if bare not in points.columns:
-                out = out.withColumnRenamed(c, bare)
-            else:
-                out = out.drop(c)  # duplicate right fields dropped (data.py:1040)
+    # assemble output in one projection: internal columns dropped, the
+    # r_ prefix stripped unless the bare name is a point column, whose
+    # duplicate right field is dropped (data.py:1040)
+    internal = {"cell", "r_" + polygon_geom, *(f"r_{c}" for c in bbox_cols)}
+    out = matched.select(*(
+        F.col(c).alias(c[2:]) if c.startswith("r_") else F.col(c)
+        for c in matched.columns
+        if c not in internal and not (c.startswith("r_") and c[2:] in points.columns)
+    ))
     if keepall:
         # left-outer null-pad: points with no match (manager.py:425-429)
         right_cols = [c for c in out.columns if c not in points.columns]

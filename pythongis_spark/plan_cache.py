@@ -1,7 +1,7 @@
 """Session-lifetime memo of facts derived from source plans.
 
-Plan-time probes (the spatial joins' layer profiles, zone cell counts,
-scan partition counts) and persisted build sides are facts about one
+Plan-time probes (the spatial joins' layer profiles, scan partition
+counts) and persisted build sides are facts about one
 source plan. Memoizing them means a repeated join against the same
 dimension table -- the pattern the reference serves with its cached
 r-tree -- plans with zero pre-jobs and reads its build side from

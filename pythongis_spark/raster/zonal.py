@@ -3,9 +3,10 @@ clip, IDW interpolation, kernel smoothing, dasymetric disperse.
 
 The flagship rewrite here is zonal statistics: the reference iterates
 every unique zone over the full raster — O(zones × pixels)
-(``pythongis/raster/analyzer.py:16-88``); ours rasterizes zones once into
-a cell-assignment join and aggregates in ONE shuffle — O(pixels)
-(SURVEY.md §3 entry point 4).
+(``pythongis/raster/analyzer.py:16-88``); ours covers the zones once as
+grid-row runs, joins the value cells to the broadcast runs and
+aggregates in ONE shuffle — O(pixels + runs) (SURVEY.md §3 entry
+point 4).
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pythongis_spark import plan_cache
 from pythongis_spark.geometry import core as G
 from pythongis_spark.geometry import wkb as W
 from pythongis_spark.raster.algebra import STATS_EXPRS, band_stats
@@ -179,7 +179,7 @@ def _cover_intervals(g, rd: RasterDef):
 def _cover_cells_udf(rd: RasterDef):
     """pandas UDF: geometry WKB → array of covered-cell runs
     ``(y, x0, x1)``, one per grid row a feature covers contiguously
-    (x1 inclusive); ``cover_cells`` expands them in Catalyst.
+    (x1 inclusive), the rows of ``cover_runs``.
 
     Cover rule: a cell is covered iff its *center* is inside the polygon
     (or it contains the point / a line passes within half a cell) —
@@ -313,25 +313,33 @@ def _cover_weights_udf(rd: RasterDef):
     return coverw
 
 
-def cover_cells(vector: DataFrame, rd: RasterDef, geom: str = "geom",
-                partial: bool = False) -> DataFrame:
-    """Feature → covered-cell rows: all of ``vector``'s columns (minus
-    the geometry) plus ``x``, ``y`` (and ``w`` when ``partial``). This is
-    the shared front end of rasterize / zonal_statistics / disperse.
-
-    One Python pass returns each feature's grid-row runs — ``(y, x0, x1)``
-    under the centre rule (``_cover_cells_udf``), ``(y, x0, x1, w)`` for
-    ``partial`` (``_cover_weights_udf``) — and Catalyst expands them with
-    ``explode(sequence(x0, x1))``, at most one grid row of cells per run,
-    so no feature is ever materialized as per-cell Python objects."""
+def cover_runs(vector: DataFrame, rd: RasterDef, geom: str = "geom",
+               partial: bool = False) -> DataFrame:
+    """Feature → covered grid-row runs: all of ``vector``'s columns
+    (minus the geometry) plus ``y``, ``x0``, ``x1`` (x1 inclusive; and
+    ``w`` when ``partial``), from one Python pass — the centre rule's
+    ``_cover_cells_udf`` or ``partial``'s ``_cover_weights_udf``. Each
+    run is at most one grid row of cells, so no feature is ever
+    materialized as per-cell Python objects."""
     keep = [F.col(c) for c in vector.columns if c != geom]
     udf = _cover_weights_udf(rd) if partial else _cover_cells_udf(rd)
     runs = vector.withColumn("_iv", F.explode(udf(F.col(geom))))
-    return runs.select(
+    fields = ["y", "x0", "x1"] + (["w"] if partial else [])
+    return runs.select(*keep, *(F.col(f"_iv.{f}").alias(f) for f in fields))
+
+
+def cover_cells(vector: DataFrame, rd: RasterDef, geom: str = "geom",
+                partial: bool = False) -> DataFrame:
+    """Feature → covered-cell rows: all of ``vector``'s columns (minus
+    the geometry) plus ``x``, ``y`` (and ``w`` when ``partial``) — the
+    front end of rasterize and disperse. ``cover_runs`` expanded by
+    Catalyst with ``explode(sequence(x0, x1))``."""
+    keep = [F.col(c) for c in vector.columns if c != geom]
+    return cover_runs(vector, rd, geom, partial).select(
         *keep,
-        F.explode(F.sequence(F.col("_iv.x0"), F.col("_iv.x1"))).alias("x"),
-        F.col("_iv.y").alias("y"),
-        *([F.col("_iv.w").alias("w")] if partial else []),
+        F.explode(F.sequence(F.col("x0"), F.col("x1"))).alias("x"),
+        F.col("y"),
+        *([F.col("w")] if partial else []),
     )
 
 
@@ -426,38 +434,27 @@ def zonal_statistics(
     zone_id: str = "zone_id",
     geom: str = "geom",
     stats: list[str] | None = None,
-    zone_cells_hint: int | None = None,
-    broadcast_cells: int = 2_000_000,
 ) -> DataFrame:
     """Per-zone stats of a value raster
     (``pythongis/raster/analyzer.py:16-88`` + ``Band.summarystats``
-    ``raster/data.py:592-779``; nodata excluded): rasterize zones (cover
-    cells) → equi-join value cells on (x, y) → ONE groupBy(zone, band).
+    ``raster/data.py:592-779``; nodata excluded): zone cover runs →
+    broadcast join of the value cells on ``y`` with the residual
+    ``x BETWEEN x0 AND x1`` → ONE groupBy(zone, band) (Raptor, VLDB
+    2019: value rows joined to polygon row intervals, not to per-cell
+    covers).
 
-    The zone cell-assignment join broadcasts only when the exploded zone
-    cells fit (≤ ``broadcast_cells``; cover-cell count is O(zone area /
-    cell area), so a continental zone set at fine resolution must NOT be
-    broadcast); otherwise a shuffled hash join on (x, y) — both sides
-    partition on the cell key, same result set. ``zone_cells_hint``
-    skips the sizing job when the caller knows the explosion size."""
-    zcells = cover_cells(zones.select(zone_id, geom), rd, geom).select(
-        zone_id, "x", "y"
+    A value cell meets each run that covers it once, so the join rows
+    are exactly those of an (x, y) join on ``cover_cells`` — a point
+    listed twice counts twice. The broadcast side holds one row per
+    run, which grows with the grid rows a zone spans, not with its area,
+    and planning runs no job."""
+    runs = cover_runs(zones.select(zone_id, geom), rd, geom).withColumnsRenamed(
+        {"y": "_zy", "x0": "_zx0", "x1": "_zx1"}
     )
-    if zone_cells_hint is not None:
-        n_cells = zone_cells_hint
-    else:
-        # the sizing count would otherwise re-execute the cover UDF
-        # chain for the join: persist the (small) zone-cell side once and
-        # memoize its count, both per semantic plan (plan_cache), so a
-        # repeat call on the same zones schedules no sizing job. The
-        # returned plan still reads the persisted frame, so it can't be
-        # unpersisted here; the cache's LRU bound releases it instead,
-        # and plan_cache.clear() if the zones' files change mid-session.
-        src = zcells
-        zcells = plan_cache.memo(src, "zone_cells", lambda: src)
-        n_cells = plan_cache.memo(src, "zone_cells.count", zcells.count)
-    build = F.broadcast(zcells) if n_cells <= broadcast_cells else zcells
-    joined = raster_cells.join(build, ["x", "y"], "inner")
+    joined = raster_cells.join(
+        F.broadcast(runs),
+        (F.col("y") == F.col("_zy")) & F.col("x").between(F.col("_zx0"), F.col("_zx1")),
+    )
     return band_stats(
         joined, stats or ["count", "sum", "mean", "min", "max"], by=[zone_id, "band"]
     )

@@ -179,26 +179,39 @@ def test_density_smooth(spark):
     assert (out["val"] <= 2.0).all()
 
 
-def test_zonal_statistics_shuffle_fallback_identical(spark):
-    """broadcast_cells=0 forces the shuffled hash join — result set must
-    match the broadcast plan exactly (the unconditional broadcast was a
-    scale-killer for continental zone sets)."""
-    z1 = W.wkb_polygon(np.array([[-180, -90], [0, -90], [0, 90], [-180, 90], [-180, -90]], float))
-    z2 = W.wkb_polygon(np.array([[0, -90], [180, -90], [180, 90], [0, 90], [0, -90]], float))
-    zones = spark.createDataFrame(pd.DataFrame({"zone_id": [1, 2], "geom": [z1, z2]}))
-    vals = FX.raster_cells(spark, w=36, h=18, bands=1)
-    bc = Z.zonal_statistics(zones, vals, RD, stats=["count", "sum"]).toPandas()
-    sh = Z.zonal_statistics(
-        zones, vals, RD, stats=["count", "sum"], broadcast_cells=0
-    ).toPandas()
-    bc = bc.sort_values(["zone_id", "band"]).reset_index(drop=True)
-    sh = sh.sort_values(["zone_id", "band"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(bc, sh)
-    # hint path: no sizing job, same rows
-    hinted = Z.zonal_statistics(
-        zones, vals, RD, stats=["count", "sum"], zone_cells_hint=648
-    ).toPandas().sort_values(["zone_id", "band"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(bc, hinted)
+def _box(x0, y0, x1, y1):
+    return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], float)
+
+
+def test_zonal_statistics_runs_join_matches_cell_join(spark):
+    """The broadcast runs join counts every value cell once per covering
+    run: the same stats as an (x, y) equi-join on the expanded cover
+    cells, duplicate point cells included, on both x directions."""
+    zones = spark.createDataFrame(pd.DataFrame({
+        "zone_id": [1, 2, 3, 4, 5, 6],
+        "geom": [
+            W.wkb_polygon(_box(-150, -60, -30, 60), [_box(-120, -30, -60, 30)]),
+            W.wkb_multipolygon([(_box(0, 0, 60, 60), []), (_box(30, 30, 90, 80), [])]),
+            W.wkb_linestring(np.array([[-170, -80], [170, 70]], float)),
+            W.wkb_multipoint(np.array([[15, -15], [15, -15], [95, 45]], float)),
+            W.wkb_polygon(_box(200, 100, 250, 120)),
+            W.wkb_polygon(_box(-500, -300, 500, 300)),
+        ],
+    }))
+    vals = FX.raster_cells(spark, w=36, h=18, bands=2).withColumn(
+        "val", F.col("val").cast("decimal(38,9)")
+    )
+    stats, key = ["count", "sum", "min", "max"], ["zone_id", "band"]
+    for rd in (RD, M.RasterDef(36, 18, (-10.0, 0.0, 180.0, 0.0, -10.0, 90.0))):
+        got = Z.zonal_statistics(zones, vals, rd, stats=stats)
+        cells = Z.cover_cells(zones, rd).select("zone_id", "x", "y")
+        want = A.band_stats(vals.join(cells, ["x", "y"]), stats, by=key)
+        got = got.toPandas().sort_values(key).reset_index(drop=True)
+        want = want.toPandas().sort_values(key).reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, want)
+        assert sorted(set(got["zone_id"])) == [1, 2, 3, 4, 6]  # 5 is off the grid
+        # both points of the repeated pair fall on a band-0 value cell
+        assert got[(got.zone_id == 4) & (got.band == 0)]["count"].item() == 3
 
 
 def test_idw_bounded_matches_unbounded_locally(spark):

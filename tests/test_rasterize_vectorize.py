@@ -481,8 +481,8 @@ def test_cover_runs_row_blocks_do_not_change_result(monkeypatch):
 
 
 # ------------------------------------------------------------------
-# plan cache: zonal_statistics zone cells and the point_in_polygon_join
-# broadcast build side
+# plan cache: the point_in_polygon_join broadcast build side; zonal
+# statistics plan without it
 # ------------------------------------------------------------------
 
 def _zone_layer(spark, x0):
@@ -512,6 +512,25 @@ def _zonal_call(spark):
     ).select("zone_id", "count", "sum")
 
 
+def test_zonal_statistics_plans_with_no_job(spark, pcache):
+    """A fresh zone layer's runs join plans without running a job, and
+    leaves nothing persisted behind."""
+    import uuid
+
+    sc = spark.sparkContext
+    run, zones = _zonal_call(spark), _zone_layer(spark, 0)
+    group = f"zonal-plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        planned = run(zones)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group) or []) == []
+    assert not pcache
+    assert [tuple(r) for r in planned.collect()] == [(0, 9, _zone_sum(0))]
+
+
 PIP_Z = 8
 
 
@@ -534,7 +553,6 @@ def _pip_call(spark):
 # kind -> (call(spark) -> run(zones) planning (zone_id, count, sum) rows,
 #          facts -> memoized sizing count, its value for _zone_layer(spark, 0))
 CACHED = {
-    "zone_cells": (_zonal_call, lambda facts: facts["zone_cells.count"], 9),
     # the 3 x 3 degree rect spans 3 x 6 level-8 index cells: the layer
     # profile's cell total at PIP_Z
     "pip_build": (

@@ -104,6 +104,24 @@ def test_pip_keepall_nullpad(spark, zones, points):
     assert all(r["point_id"] not in matched_ids for r in nulls)
 
 
+@pytest.mark.parametrize("keepall", [False, True])
+def test_pip_output_columns_drop_colliding_polygon_field(spark, keepall):
+    """Point columns first, then the polygon columns with their bare
+    names; a polygon column named like a point column is dropped."""
+    box = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]], float)
+    polys = spark.createDataFrame(pd.DataFrame(
+        {"zone_id": [7], "name": ["zone"], "area": [16.0], "geom": [W.wkb_polygon(box)]}
+    ))
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"pid": [1, 2], "lon": [1.5, 9.5], "lat": [1.5, 9.5], "name": ["in", "out"]}
+    ))
+    got = point_in_polygon_join(pts, polys, point_id="pid", keepall=keepall)
+    assert got.columns == ["pid", "lon", "lat", "name", "zone_id", "area"]
+    rows = sorted(tuple(r) for r in got.collect())
+    want = [(1, 1.5, 1.5, "in", 7, 16.0)]
+    assert rows == (want + [(2, 9.5, 9.5, "out", None, None)] if keepall else want)
+
+
 def test_semi_and_anti_partition_points(spark, zones, points):
     semi = spatial_semi_join(points, zones, point_id="point_id")
     anti = spatial_anti_join(points, zones, point_id="point_id")

@@ -114,10 +114,16 @@ def main():
         "moving_window", plan, must=[r"Window", r"hashpartitioning\(user_id"]
     )
 
-    # 5. zonal stats: broadcast of zone cells, single agg shuffle
+    # 5. zonal stats: value cells joined to the broadcast zone runs (no
+    # expansion of the runs into cells), single agg shuffle
     z = E.queries()["zonal_stats_raster"](spark, sf)
     plan = fmt(z)
-    failures += not check("zonal_stats", plan, must=[r"BroadcastHashJoin", r"HashAggregate"])
+    failures += not check(
+        "zonal_stats",
+        plan,
+        must=[r"BroadcastHashJoin", r"HashAggregate"],
+        must_not=[r"sequence\("],
+    )
 
     # 5b. rasterize on a 1080×540 grid, both cover rules: ONE Python
     # pass emitting grid-row runs (partial: with their weights),
