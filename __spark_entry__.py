@@ -35,8 +35,8 @@ def _tagged_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → deterministic points → pip join onto the 60 oracle zones.
 
     Planner hints: the zone layer is a known-tiny dimension (z=6 keeps
-    candidates ≈ 1.3 per point; build_rows=0 skips the sizing job and
-    forces broadcast)."""
+    candidates ≈ 1.3 per point; build_rows=0 forces the broadcast build
+    side — the layer's memoized profile still runs once)."""
     pts = FX.events_points(spark, sf_dir)
     zones = FX.oracle_zones(spark)
     return point_in_polygon_join(

@@ -286,7 +286,7 @@ def images_df(spark: SparkSession, n: int, hotspot: bool = False, partitions: in
     # only on i, so contiguous id blocks are the same table as a
     # round-robin shuffle — minus one Exchange (the per-row mix of
     # 32/64/128-px sizes cycles every 3 ids, so block balance is equal)
-    rng = spark.range(n, numPartitions=partitions) if partitions else spark.range(n)
+    rng = spark.range(n, numPartitions=partitions)
     return rng.mapInPandas(gen, schema=IMAGES_SCHEMA)
 
 
@@ -345,7 +345,7 @@ def noise_images_df(
     # only on i, so contiguous id blocks are the same table as a
     # round-robin shuffle — minus one Exchange (the per-row mix of
     # 32/64/128-px sizes cycles every 3 ids, so block balance is equal)
-    rng = spark.range(n, numPartitions=partitions) if partitions else spark.range(n)
+    rng = spark.range(n, numPartitions=partitions)
     return rng.mapInPandas(gen, schema=IMAGES_SCHEMA)
 
 

@@ -652,9 +652,7 @@ def noise_audio_df(spark, n: int, dup_every: int | None = None,
                     rows.append(dup)
             yield pd.DataFrame(rows)
 
-    rng = spark.range(n)
-    if partitions:
-        rng = rng.repartition(partitions)
+    rng = spark.range(n, numPartitions=partitions)
     return rng.mapInPandas(gen, schema=AUDIO_SCHEMA_DDL)
 
 
@@ -688,9 +686,7 @@ def noise_video_df(spark, n: int, dup_every: int | None = None,
                     rows.append(dup)
             yield pd.DataFrame(rows)
 
-    rng = spark.range(n)
-    if partitions:
-        rng = rng.repartition(partitions)
+    rng = spark.range(n, numPartitions=partitions)
     return rng.mapInPandas(gen, schema=VIDEO_SCHEMA_DDL)
 
 
@@ -699,9 +695,7 @@ def audio_df(spark, n: int, partitions: int | None = None) -> DataFrame:
         for pdf in batches:
             yield pd.DataFrame([make_audio_clip(int(i)) for i in pdf["id"]])
 
-    rng = spark.range(n)
-    if partitions:
-        rng = rng.repartition(partitions)
+    rng = spark.range(n, numPartitions=partitions)
     return rng.mapInPandas(gen, schema=AUDIO_SCHEMA_DDL)
 
 
@@ -710,9 +704,7 @@ def video_df(spark, n: int, partitions: int | None = None) -> DataFrame:
         for pdf in batches:
             yield pd.DataFrame([make_video(int(i)) for i in pdf["id"]])
 
-    rng = spark.range(n)
-    if partitions:
-        rng = rng.repartition(partitions)
+    rng = spark.range(n, numPartitions=partitions)
     return rng.mapInPandas(gen, schema=VIDEO_SCHEMA_DDL)
 
 
@@ -751,9 +743,7 @@ def lcg_audio_df(spark, n: int, partitions: int | None = None) -> DataFrame:
         for pdf in batches:
             yield pd.DataFrame([make_lcg_audio_clip(int(i)) for i in pdf["id"]])
 
-    rng = spark.range(n)
-    if partitions:
-        rng = rng.repartition(partitions)
+    rng = spark.range(n, numPartitions=partitions)
     return rng.mapInPandas(gen, schema=LCG_AUDIO_SCHEMA_DDL)
 
 
@@ -822,9 +812,7 @@ def lcg_video_df(spark, n: int, partitions: int | None = None) -> DataFrame:
         for pdf in batches:
             yield pd.DataFrame([make_lcg_video(int(i)) for i in pdf["id"]])
 
-    rng = spark.range(n)
-    if partitions:
-        rng = rng.repartition(partitions)
+    rng = spark.range(n, numPartitions=partitions)
     return rng.mapInPandas(gen, schema=LCG_VIDEO_SCHEMA_DDL)
 
 

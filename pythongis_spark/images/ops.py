@@ -257,9 +257,7 @@ def lcg_image_df(spark: SparkSession, n: int, w: int = 64, h: int = 48,
                 for i in pdf["id"]
             ])
 
-    rng = spark.range(n)
-    if partitions:
-        rng = rng.repartition(partitions)
+    rng = spark.range(n, numPartitions=partitions)
     return rng.mapInPandas(gen, schema=LCG_IMAGE_SCHEMA)
 
 

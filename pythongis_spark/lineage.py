@@ -1,4 +1,4 @@
-"""Per-partition lineage/metrics and checkpoint-resumable writes.
+"""Checkpoint-resumable writes with per-key lineage metrics.
 
 North-rule requirement: "resumable from checkpoint with per-partition
 lineage + metrics". The reference has no parallelism, so this is
@@ -9,10 +9,14 @@ Design (Iceberg-style snapshot semantics on plain parquet, since the
 Iceberg jars are not in this image — connector stubbed behind the same
 API):
 
-* a *job* writes data partitioned by a logical key column;
+* a *job* writes data partitioned by a logical key column, in one
+  execution of the funnel that produces it;
 * each successful batch appends a **commit file** to ``_manifest/`` with
-  the completed key values + per-key metrics (rows, bytes, wall time) —
-  the commit file is written atomically (tmp + rename);
+  the completed key values + metrics (rows per key, total rows, write
+  wall time, throughput) — the keys and row counts are read from the
+  Parquet footers of the files the write added, as an Iceberg manifest
+  records each data file's record count; the commit file is written
+  atomically (tmp + rename);
 * **resume** = anti-join pending keys against the union of commit files
   and process only the remainder — identical to Iceberg snapshot
   expire/append semantics at the granularity we control from PySpark.
@@ -24,43 +28,14 @@ import json
 import os
 import time
 import uuid
+from collections import Counter
+from urllib.parse import unquote
 
-import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_DIR = "_manifest"
-
-
-def partition_metrics(df: DataFrame) -> DataFrame:
-    """One row per physical partition: (partition_id, rows, approx_bytes,
-    wall_ms) — collected inside the executors via mapInPandas (the
-    per-partition lineage feed)."""
-
-    def run(batches):
-        from pyspark import TaskContext
-
-        t0 = time.perf_counter()
-        rows = 0
-        nbytes = 0
-        for pdf in batches:
-            rows += len(pdf)
-            nbytes += int(pdf.memory_usage(deep=True).sum())
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        yield pd.DataFrame(
-            [
-                dict(
-                    partition_id=pid,
-                    rows=rows,
-                    approx_bytes=nbytes,
-                    wall_ms=(time.perf_counter() - t0) * 1000.0,
-                )
-            ]
-        )
-
-    return df.mapInPandas(
-        run, schema="partition_id int, rows long, approx_bytes long, wall_ms double"
-    )
 
 
 def _manifest_path(base: str) -> str:
@@ -100,56 +75,59 @@ def _commit(base: str, keys: list[str], metrics: dict) -> str:
     return final
 
 
-def run_checkpointed(
-    df: DataFrame,
-    base: str,
-    key_col: str,
-    batch_keys: int | None = None,
-) -> dict:
+def _parquet_files(data: str) -> set[str]:
+    """Every ``.parquet`` file under ``data``."""
+    return {
+        os.path.join(root, f)
+        for root, _, files in os.walk(data)
+        for f in files
+        if f.endswith(".parquet")
+    }
+
+
+def run_checkpointed(df: DataFrame, base: str, key_col: str) -> dict:
     """Write ``df`` partitioned by ``key_col`` with resume support.
 
     Skips key values already recorded in the manifest (resume =
     anti-join), writes the remainder with dynamic partition overwrite
-    (idempotent re-run of a failed batch), then commits the new keys +
-    metrics. Returns a summary dict.
+    (idempotent re-run of a batch that crashed before its commit), then
+    commits the new keys + metrics. The funnel runs once: the keys and
+    ``rows_per_key`` come from the Parquet footers of the files this
+    write added (read on the driver, no Spark job), so the manifest
+    counts what was written. Returns a summary dict.
     """
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     df = df.withColumn(key_col, F.col(key_col).cast("string"))
-    done = completed_keys(spark, base)
+    done = completed_keys(df.sparkSession, base)
     pending = df
     if done is not None:
         pending = df.join(
             done.withColumnRenamed("key", key_col), key_col, "left_anti"
         )
-    # ONE pre-write job: the per-key counts also carry the key list
-    # (a separate distinct().collect() re-ran the whole funnel, and
-    # pairing values from independent jobs on the same lazy frame is
-    # the drift pattern CLAUDE.md warns about)
-    counts = {
-        r[0]: r[1]
-        for r in pending.groupBy(key_col).agg(F.count("*").alias("n")).collect()
-    }
-    keys = sorted(counts)
-    if not keys:
-        return {"written_keys": [], "skipped": True}
-    if batch_keys:
-        keys = keys[:batch_keys]
-        pending = pending.filter(F.col(key_col).isin(keys))
-        counts = {k: counts[k] for k in keys}
+    data = os.path.join(base, "data")
+    before = _parquet_files(data)
     t0 = time.perf_counter()
     (
         pending.repartition(F.col(key_col))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(key_col)
-        .parquet(os.path.join(base, "data"))
+        .parquet(data)
     )
     wall = time.perf_counter() - t0
+    counts = Counter()
+    for path in _parquet_files(data) - before:
+        # the file's directory is ``key_col=<value>``, %XX-escaped by Spark
+        key = unquote(os.path.basename(os.path.dirname(path)).partition("=")[2])
+        counts[key] += pq.read_metadata(path).num_rows
+    keys = sorted(counts)
+    if not keys:
+        return {"written_keys": [], "skipped": True}
+    total = sum(counts.values())
     metrics = {
-        "rows_per_key": counts,
-        "total_rows": int(sum(counts.values())),
+        "rows_per_key": {k: counts[k] for k in keys},
+        "total_rows": total,
         "wall_sec": wall,
-        "throughput_rows_per_sec": (sum(counts.values()) / wall) if wall > 0 else None,
+        "throughput_rows_per_sec": total / wall if wall > 0 else None,
     }
     _commit(base, keys, metrics)
     return {"written_keys": keys, "skipped": False, "metrics": metrics}

@@ -342,6 +342,11 @@ def point_in_polygon_join(
 
     pid = point_id or points.columns[0]
     bbox_cols = ["bbox_xmin", "bbox_ymin", "bbox_xmax", "bbox_ymax"]
+    # build-side prefix: one no point column starts with, so the prefixed
+    # polygon columns never collide with the point columns in the join
+    rp = "r_"
+    while any(c.startswith(rp) for c in points.columns):
+        rp = "_" + rp
     # giant-polygon split: features covering > cell_cap cells go to a
     # broadcast nested-loop bbox path instead of the cell explode (one
     # continental polygon would otherwise expand to up to 4^z rows —
@@ -356,7 +361,7 @@ def point_in_polygon_join(
 
     def build() -> DataFrame:
         # polygons exploded to covering cells; a warm plan never builds it
-        return _prefix(IU.explode_bbox_cells(polys_n, z), "r_", exclude=["cell"])
+        return _prefix(IU.explode_bbox_cells(polys_n, z), rp, exclude=["cell"])
 
     # probe side: single cell per point (pure Catalyst)
     # null coordinates never match (reference skips null geometry,
@@ -370,7 +375,7 @@ def point_in_polygon_join(
     if build_count <= broadcast_rows:
         # persisted: the explode runs once per dimension (broadcast path
         # only; a shuffled build side may be large)
-        cached = plan_cache.memo(polygons, ("build", z, DEFAULT_CELL_CAP), build)
+        cached = plan_cache.memo(polygons, ("build", z, DEFAULT_CELL_CAP, rp), build)
         cand = probe.join(F.broadcast(cached), "cell", "inner")
     else:
         probe_s, build_s, keys = _salt_plan(
@@ -379,20 +384,20 @@ def point_in_polygon_join(
         cand = probe_s.join(build_s, keys, "inner").drop("salt")
     cand = cand.drop("cell")
     pt_in_bbox = (
-        (F.col(lon) >= F.col("r_bbox_xmin"))
-        & (F.col(lon) <= F.col("r_bbox_xmax"))
-        & (F.col(lat) >= F.col("r_bbox_ymin"))
-        & (F.col(lat) <= F.col("r_bbox_ymax"))
+        (F.col(lon) >= F.col(rp + "bbox_xmin"))
+        & (F.col(lon) <= F.col(rp + "bbox_xmax"))
+        & (F.col(lat) >= F.col(rp + "bbox_ymin"))
+        & (F.col(lat) <= F.col(rp + "bbox_ymax"))
     )
     if has_giants:
         nl = probe.drop("cell").join(
-            F.broadcast(_prefix(polys_g, "r_")), pt_in_bbox, "inner"
+            F.broadcast(_prefix(polys_g, rp)), pt_in_bbox, "inner"
         )
         cand = cand.unionByName(nl)
 
     if subkey is not None:
         lcol, rcol = subkey
-        cand = cand.filter(F.col(lcol) == F.col("r_" + rcol))
+        cand = cand.filter(F.col(lcol) == F.col(rp + rcol))
 
     # rectangle fast path: when EVERY build polygon is exactly its own
     # bbox (gridded zone/tile dimensions — the profile's flag), the
@@ -403,16 +408,16 @@ def point_in_polygon_join(
     # bit-identical results, no Python in the plan.
     if rect_fast_path and prof.all_rect:
         matched = cand.filter(
-            (F.col(lon) >= F.col("r_bbox_xmin"))
-            & (F.col(lon) < F.col("r_bbox_xmax"))
-            & (F.col(lat) >= F.col("r_bbox_ymin"))
-            & (F.col(lat) < F.col("r_bbox_ymax"))
+            (F.col(lon) >= F.col(rp + "bbox_xmin"))
+            & (F.col(lon) < F.col(rp + "bbox_xmax"))
+            & (F.col(lat) >= F.col(rp + "bbox_ymin"))
+            & (F.col(lat) < F.col(rp + "bbox_ymax"))
         )
     else:
         # codegen point-in-bbox prefilter: a point in a covering cell can
         # still fall outside the polygon bbox — cull it before Python
         matched = cand.filter(pt_in_bbox).filter(
-            _refine_pip(F.col(lon), F.col(lat), F.col("r_" + polygon_geom))
+            _refine_pip(F.col(lon), F.col(lat), F.col(rp + polygon_geom))
         )
 
     if how == "semi":
@@ -424,15 +429,14 @@ def point_in_polygon_join(
             matched.select(F.col(pid)).distinct(), pid, "left_anti"
         )
 
-    # assemble output in one projection: internal columns dropped, the
-    # r_ prefix stripped unless the bare name is a point column, whose
-    # duplicate right field is dropped (data.py:1040)
-    internal = {"cell", "r_" + polygon_geom, *(f"r_{c}" for c in bbox_cols)}
-    out = matched.select(*(
-        F.col(c).alias(c[2:]) if c.startswith("r_") else F.col(c)
-        for c in matched.columns
-        if c not in internal and not (c.startswith("r_") and c[2:] in points.columns)
-    ))
+    # assemble output in one projection: the point columns, then the
+    # polygon columns by their own names minus geometry, bbox and any
+    # name a point column has (data.py:1040)
+    out = matched.select(
+        *points.columns,
+        *(F.col(rp + c).alias(c) for c in polygons.columns
+          if c != polygon_geom and c not in bbox_cols and c not in points.columns),
+    )
     if keepall:
         # left-outer null-pad: points with no match (manager.py:425-429)
         right_cols = [c for c in out.columns if c not in points.columns]
@@ -530,7 +534,7 @@ def spatial_join(
 
     build_count = rprof.cells[z] if build_rows is None else build_rows
     if build_count <= broadcast_rows:
-        cached = plan_cache.memo(right, ("build", z, cell_cap), rx)
+        cached = plan_cache.memo(right, ("build", z, cell_cap, "r_"), rx)
         cand = lx.join(F.broadcast(cached), "cell", "inner")
     else:
         probe_s, build_s, keys = _salt_plan(
@@ -621,19 +625,14 @@ def spatial_join(
             "clip_geom", clipper(F.col("l_" + left_geom), F.col("r_" + right_geom))
         )
 
-    internal = [p + c for p in ("l_", "r_") for c in bbox_cols]
-    out = matched.drop(*[c for c in internal if c in matched.columns])
-    out = out.drop("r_" + right_geom)
-    for c in out.columns:
-        if c.startswith("l_"):
-            out = out.withColumnRenamed(c, c[2:])
-    for c in out.columns:
-        if c.startswith("r_"):
-            bare = c[2:]
-            if bare not in left.columns and bare != "clip_geom":
-                out = out.withColumnRenamed(c, bare)
-            else:
-                out = out.drop(c)
+    # one projection: the left columns, then the right columns by their
+    # own names minus geometry, bbox, clip_geom and any left name
+    out = matched.select(
+        *(F.col("l_" + c).alias(c) for c in left.columns if c not in bbox_cols),
+        *(F.col("r_" + c).alias(c) for c in right.columns
+          if c not in (right_geom, "clip_geom", *bbox_cols) and c not in left.columns),
+        *(["clip_geom"] if clip is not None else []),
+    )
     if keepall:
         right_cols = [c for c in out.columns if c not in left.columns]
         base = left.drop(*[c for c in bbox_cols if c in left.columns])

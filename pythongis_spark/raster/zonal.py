@@ -149,8 +149,17 @@ def _line_intervals(g, rd: RasterDef, gx: np.ndarray, gy: np.ndarray):
 
 def _cover_intervals(g, rd: RasterDef):
     """Covered cells of one decoded geometry as grid-row x-intervals:
-    (y, x0, x1) int arrays, x1 inclusive. See ``_cover_cells_udf`` for
-    the cover rule."""
+    (y, x0, x1) int arrays, one run per grid row a feature covers
+    contiguously, x1 inclusive.
+
+    Cover rule: a cell is covered iff its *center* is inside the polygon
+    (or it contains the point / a line passes within half a cell) —
+    matching the practical effect of the reference's PIL paint fill
+    (``pythongis/raster/manager.py:815-869``); exact PIL scanline parity
+    is not reproduced (documented divergence). Polygons are scanned row
+    by row (``_polygon_intervals``), so per-feature output is
+    O(rows crossed), not O(cells), and no giant-feature window split is
+    needed. Each point yields one single-cell run; duplicates stay."""
     if g[0] in ("Point", "MultiPoint"):
         coords = W.all_coords(g)
         cx = np.floor((coords[:, 0] - rd.xoffset) / rd.xscale).astype(int)
@@ -176,44 +185,11 @@ def _cover_intervals(g, rd: RasterDef):
     return y0 + r, x1 - e + 1, x1 - s
 
 
-def _cover_cells_udf(rd: RasterDef):
-    """pandas UDF: geometry WKB → array of covered-cell runs
-    ``(y, x0, x1)``, one per grid row a feature covers contiguously
-    (x1 inclusive), the rows of ``cover_runs``.
-
-    Cover rule: a cell is covered iff its *center* is inside the polygon
-    (or it contains the point / a line passes within half a cell) —
-    matching the practical effect of the reference's PIL paint fill
-    (``pythongis/raster/manager.py:815-869``); exact PIL scanline parity
-    is not reproduced (documented divergence). Polygons are scanned row
-    by row (``_polygon_intervals``), so per-feature output is
-    O(rows crossed), not O(cells), and no giant-feature window split is
-    needed. Each point yields one single-cell run; duplicates stay.
-    """
-
-    @F.pandas_udf("array<struct<y:int,x0:int,x1:int>>")
-    def cover(geom: pd.Series) -> pd.Series:
-        out = []
-        for blob in geom.to_numpy(object):
-            if blob is None:
-                out.append(None)
-                continue
-            y, x0, x1 = _cover_intervals(W.decode_wkb(bytes(blob)), rd)
-            out.append(
-                [
-                    {"y": a, "x0": b, "x1": c}
-                    for a, b, c in zip(y.tolist(), x0.tolist(), x1.tolist())
-                ]
-            )
-        return pd.Series(out, index=geom.index)
-
-    return cover
-
-
 def _partial_intervals(g, rd: RasterDef):
     """``partial`` cover of one decoded polygon as grid-row runs
     ``(y, x0, x1, w)`` arrays, x1 inclusive (Raster Intervals, SIGMOD
-    2023).
+    2023). The cover set is every cell with fraction > 0 (the reference
+    burns feature outlines to find border cells, ``manager.py:915-921``).
 
     Border cells are the columns each ring edge's x-extent reaches inside
     a row strip: one-cell runs weighted by ``_cover_fraction`` on the
@@ -286,31 +262,25 @@ def _partial_intervals(g, rd: RasterDef):
     return y0 + y, x0 + s, x0 + e, w
 
 
-def _cover_weights_udf(rd: RasterDef):
-    """pandas UDF: polygon WKB → array of ``partial`` cover runs
-    ``(y, x0, x1, w)`` (x1 inclusive; see ``_partial_intervals``): each
-    border cell is its own run weighted by the covered fraction of the
-    cell, the cells between them are runs of weight 1.0. The cover set is
-    every cell with fraction > 0 (the reference burns feature outlines to
-    find border cells, ``manager.py:915-921``)."""
+def _cover_udf(rd: RasterDef, intervals, fields: str):
+    """pandas UDF: geometry WKB → array of covered-cell runs, one struct
+    of ``fields`` (a DDL list such as ``"y:int,x0:int,x1:int"``) per run
+    that ``intervals(g, rd)`` returns as parallel arrays — the rows of
+    ``cover_runs``."""
+    names = [f.split(":")[0] for f in fields.split(",")]
 
-    @F.pandas_udf("array<struct<y:int,x0:int,x1:int,w:double>>")
-    def coverw(geom: pd.Series) -> pd.Series:
+    @F.pandas_udf(f"array<struct<{fields}>>")
+    def cover(geom: pd.Series) -> pd.Series:
         out = []
         for blob in geom.to_numpy(object):
             if blob is None:
                 out.append(None)
                 continue
-            y, x0, x1, w = _partial_intervals(W.decode_wkb(bytes(blob)), rd)
-            out.append(
-                [
-                    {"y": a, "x0": b, "x1": c, "w": d}
-                    for a, b, c, d in zip(y.tolist(), x0.tolist(), x1.tolist(), w.tolist())
-                ]
-            )
+            runs = intervals(W.decode_wkb(bytes(blob)), rd)
+            out.append([dict(zip(names, r)) for r in zip(*(a.tolist() for a in runs))])
         return pd.Series(out, index=geom.index)
 
-    return coverw
+    return cover
 
 
 def cover_runs(vector: DataFrame, rd: RasterDef, geom: str = "geom",
@@ -318,14 +288,16 @@ def cover_runs(vector: DataFrame, rd: RasterDef, geom: str = "geom",
     """Feature → covered grid-row runs: all of ``vector``'s columns
     (minus the geometry) plus ``y``, ``x0``, ``x1`` (x1 inclusive; and
     ``w`` when ``partial``), from one Python pass — the centre rule's
-    ``_cover_cells_udf`` or ``partial``'s ``_cover_weights_udf``. Each
+    ``_cover_intervals`` or ``partial``'s ``_partial_intervals``. Each
     run is at most one grid row of cells, so no feature is ever
     materialized as per-cell Python objects."""
     keep = [F.col(c) for c in vector.columns if c != geom]
-    udf = _cover_weights_udf(rd) if partial else _cover_cells_udf(rd)
+    if partial:
+        udf = _cover_udf(rd, _partial_intervals, "y:int,x0:int,x1:int,w:double")
+    else:
+        udf = _cover_udf(rd, _cover_intervals, "y:int,x0:int,x1:int")
     runs = vector.withColumn("_iv", F.explode(udf(F.col(geom))))
-    fields = ["y", "x0", "x1"] + (["w"] if partial else [])
-    return runs.select(*keep, *(F.col(f"_iv.{f}").alias(f) for f in fields))
+    return runs.select(*keep, "_iv.*")
 
 
 def cover_cells(vector: DataFrame, rd: RasterDef, geom: str = "geom",

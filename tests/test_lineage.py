@@ -1,19 +1,15 @@
-"""Checkpoint/resume + partition metrics tests."""
+"""Checkpoint/resume tests."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from pythongis_spark import lineage as L
 
 
-def test_partition_metrics(spark):
-    df = spark.range(10_000).repartition(4)
-    m = L.partition_metrics(df).toPandas()
-    assert m["rows"].sum() == 10_000
-    assert len(m) == 4
-    assert (m["approx_bytes"] > 0).all()
+def _key_counts(df, key_col):
+    # read back, a numeric-looking partition value is inferred as a number
+    return {str(r[0]): r[1] for r in df.groupBy(key_col).count().collect()}
 
 
 def test_checkpoint_resume(spark, tmp_path):
@@ -21,8 +17,8 @@ def test_checkpoint_resume(spark, tmp_path):
     df = spark.range(1000).withColumn("k", F.pmod(F.col("id"), 10).cast("string"))
 
     # first run: only 4 keys (simulated partial run / crash after commit)
-    r1 = L.run_checkpointed(df, base, "k", batch_keys=4)
-    assert len(r1["written_keys"]) == 4 and not r1["skipped"]
+    r1 = L.run_checkpointed(df.filter(F.col("k").isin("0", "1", "2", "3")), base, "k")
+    assert r1["written_keys"] == ["0", "1", "2", "3"] and not r1["skipped"]
     assert len(L.job_metrics(base)) == 1
 
     # resume: processes exactly the remaining 6 keys
@@ -32,7 +28,7 @@ def test_checkpoint_resume(spark, tmp_path):
 
     # third run: nothing pending
     r3 = L.run_checkpointed(df, base, "k")
-    assert r3["skipped"]
+    assert r3 == {"written_keys": [], "skipped": True}
 
     # data complete and correct
     out = L.read_checkpointed(spark, base)
@@ -46,13 +42,89 @@ def test_checkpoint_resume(spark, tmp_path):
 
 
 def test_checkpoint_idempotent_rerun_overwrites(spark, tmp_path):
+    """A batch whose data landed but whose commit did not (a crash before
+    commit) is rewritten in place by dynamic overwrite: same row total,
+    and its new commit counts the rewritten rows."""
     base = str(tmp_path / "job2")
-    df = spark.range(100).withColumn("k", F.pmod(F.col("id"), 2).cast("string"))
-    L.run_checkpointed(df, base, "k", batch_keys=1)
-    # simulate a re-run of the same batch after a crash *before* commit:
-    # dynamic overwrite of the same partition must not duplicate rows
+    df = spark.range(700).withColumn("k", F.pmod(F.col("id"), 7).cast("string"))
+    L.run_checkpointed(df.filter(F.col("k") < "3"), base, "k")
     L.run_checkpointed(df, base, "k")
-    assert L.read_checkpointed(spark, base).count() == 100
+    mdir = os.path.join(base, L.MANIFEST_DIR)
+    last = sorted(f for f in os.listdir(mdir) if f.endswith(".json"))[-1]
+    os.remove(os.path.join(mdir, last))
+
+    r = L.run_checkpointed(df, base, "k")
+    assert r["written_keys"] == ["3", "4", "5", "6"]
+    out = L.read_checkpointed(spark, base)
+    assert out.count() == 700
+    got = _key_counts(out, "k")
+    assert r["metrics"]["rows_per_key"] == {k: got[k] for k in r["written_keys"]}
+    assert sum(c["metrics"]["total_rows"] for c in L.job_metrics(base)) == 700
+
+
+def test_write_runs_the_funnel_once(spark, tmp_path):
+    """The manifest's keys and counts come from the write itself: a
+    counting UDF sees every input row once, not once more for a
+    pre-write count."""
+    n = 1000
+    seen = spark.sparkContext.accumulator(0)
+
+    def tally(i):
+        seen.add(1)
+        return i
+
+    funnel = F.udf(tally, "long").asNondeterministic()
+    df = (
+        spark.range(n)
+        .select(funnel("id").alias("id"))
+        .withColumn("k", F.pmod(F.col("id"), 10))
+    )
+    r = L.run_checkpointed(df, str(tmp_path / "once"), "k")
+    assert r["metrics"]["total_rows"] == n
+    assert seen.value == n
+
+
+def test_manifest_counts_equal_read_back(spark, tmp_path):
+    """Each commit's rows_per_key equals the per-key row counts read back,
+    for keys that Spark escapes in partition directory names."""
+    base = str(tmp_path / "counts")
+    names = F.array(*(F.lit(k) for k in ["a/b", "c=d", "50%", "plain", "sp ace"]))
+    # uneven per-key counts: 100 rows for each of the first four keys,
+    # 1100 for the last
+    df = spark.range(1500).withColumn(
+        "k", F.element_at(names, F.least(F.pmod("id", 15), F.lit(4)).cast("int") + 1)
+    )
+    L.run_checkpointed(df.filter(F.col("k").isin("a/b", "50%")), base, "k")
+    L.run_checkpointed(df, base, "k")
+    got = _key_counts(L.read_checkpointed(spark, base), "k")
+    assert got == _key_counts(df, "k")
+    commits = L.job_metrics(base)
+    assert [sorted(c["keys"]) for c in commits] == [
+        ["50%", "a/b"], ["c=d", "plain", "sp ace"]
+    ]
+    for c in commits:
+        m = c["metrics"]
+        assert m["rows_per_key"] == {k: got[k] for k in c["keys"]}
+        assert m["total_rows"] == sum(m["rows_per_key"].values())
+
+
+def test_session_overwrite_mode_unchanged(spark, tmp_path):
+    """The dynamic overwrite is a per-write option: the session keeps its
+    mode, and keys committed earlier survive a later write."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "STATIC")
+    try:
+        base = str(tmp_path / "mode")
+        df = spark.range(100).withColumn("k", F.pmod(F.col("id"), 4).cast("string"))
+        L.run_checkpointed(df.filter(F.col("k") == "0"), base, "k")
+        L.run_checkpointed(df, base, "k")
+        assert spark.conf.get(conf) == "STATIC"
+        assert _key_counts(L.read_checkpointed(spark, base), "k") == {
+            k: 25 for k in "0123"
+        }
+    finally:
+        spark.conf.set(conf, prev)
 
 
 def test_text_pipeline_job_end_to_end(spark, tmp_path, capsys):

@@ -107,19 +107,50 @@ def test_pip_keepall_nullpad(spark, zones, points):
 @pytest.mark.parametrize("keepall", [False, True])
 def test_pip_output_columns_drop_colliding_polygon_field(spark, keepall):
     """Point columns first, then the polygon columns with their bare
-    names; a polygon column named like a point column is dropped."""
+    names; a polygon column named like a point column is dropped, and a
+    point column keeps its name whatever its prefix."""
     box = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]], float)
-    polys = spark.createDataFrame(pd.DataFrame(
-        {"zone_id": [7], "name": ["zone"], "area": [16.0], "geom": [W.wkb_polygon(box)]}
+    cases = [
+        # (point column, polygon column, output columns, polygon values)
+        ("name", "name", ["pid", "lon", "lat", "name", "zone_id", "area"], (7, 16.0)),
+        ("r_id", "id", ["pid", "lon", "lat", "r_id", "zone_id", "id", "area"],
+         (7, "zone", 16.0)),
+    ]
+    for pt_col, poly_col, cols, poly_vals in cases:
+        polys = spark.createDataFrame(pd.DataFrame(
+            {"zone_id": [7], poly_col: ["zone"], "area": [16.0], "geom": [W.wkb_polygon(box)]}
+        ))
+        pts = spark.createDataFrame(pd.DataFrame(
+            {"pid": [1, 2], "lon": [1.5, 9.5], "lat": [1.5, 9.5], pt_col: ["in", "out"]}
+        ))
+        got = point_in_polygon_join(pts, polys, point_id="pid", keepall=keepall)
+        assert got.columns == cols
+        rows = sorted(tuple(r) for r in got.collect())
+        want = [(1, 1.5, 1.5, "in", *poly_vals)]
+        if keepall:
+            want.append((2, 9.5, 9.5, "out", *(None,) * len(poly_vals)))
+        assert rows == want
+
+
+@pytest.mark.parametrize("keepall", [False, True])
+def test_spatial_join_output_keeps_left_r_column(spark, keepall):
+    """A left column named ``r_id`` keeps its name next to a right ``id``."""
+    def square(x0):
+        return W.wkb_polygon(np.array(
+            [[x0, 0], [x0 + 4, 0], [x0 + 4, 4], [x0, 4], [x0, 0]], float
+        ))
+
+    left = spark.createDataFrame(pd.DataFrame(
+        {"a_id": [1, 2], "r_id": ["a", "b"], "geom": [square(0), square(20)]}
     ))
-    pts = spark.createDataFrame(pd.DataFrame(
-        {"pid": [1, 2], "lon": [1.5, 9.5], "lat": [1.5, 9.5], "name": ["in", "out"]}
+    right = spark.createDataFrame(pd.DataFrame(
+        {"b_id": [9], "id": ["z"], "geom": [square(2)]}
     ))
-    got = point_in_polygon_join(pts, polys, point_id="pid", keepall=keepall)
-    assert got.columns == ["pid", "lon", "lat", "name", "zone_id", "area"]
-    rows = sorted(tuple(r) for r in got.collect())
-    want = [(1, 1.5, 1.5, "in", 7, 16.0)]
-    assert rows == (want + [(2, 9.5, 9.5, "out", None, None)] if keepall else want)
+    got = spatial_join(left, right, "intersects", left_id="a_id", keepall=keepall)
+    assert got.columns == ["a_id", "r_id", "geom", "b_id", "id"]
+    rows = sorted((r["a_id"], r["r_id"], r["b_id"], r["id"]) for r in got.collect())
+    want = [(1, "a", 9, "z")]
+    assert rows == (want + [(2, "b", None, None)] if keepall else want)
 
 
 def test_semi_and_anti_partition_points(spark, zones, points):
