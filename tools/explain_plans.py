@@ -410,6 +410,32 @@ def main():
               f"{'OK' if ok22 else 'PLAN REGRESSION'}")
         failures += not ok22
 
+    # 23. checkpoint resume: the committed keys are a NOT IN predicate on
+    # the key that Catalyst pushes below the funnel's aggregate — no
+    # anti-join, no Python-built key frame. Formatted plans number nodes
+    # children first, so "below" is a smaller node id.
+    import tempfile
+
+    from pythongis_spark import lineage as L
+
+    funnel = pip.withColumn(
+        "tile", IU.point_cell_expr(F.col("lon"), F.col("lat"), 8)
+    ).groupBy("zone_id", "tile").count()
+    with tempfile.TemporaryDirectory() as base:
+        L._commit(base, [str(k) for k in range(12)], {})
+        plan = fmt(L._pending(funnel, base, "zone_id"))
+    key_filters = [int(n) for n in re.findall(
+        r"\((\d+)\) Filter\n.*\nCondition : .*__HIVE_DEFAULT_PARTITION__\) (?:INSET |IN \()",
+        plan)]
+    aggs = [int(n) for n in re.findall(r"\((\d+)\) HashAggregate", plan)]
+    ok23 = (bool(key_filters and aggs) and max(key_filters) < min(aggs)
+            and not re.search(r"LeftAnti|Scan ExistingRDD", plan))
+    if not ok23:
+        print(f"  key-predicate Filter nodes {key_filters}, HashAggregate nodes "
+              f"{aggs} (want all below), no LeftAnti / Scan ExistingRDD")
+    print(f"resume_pending_pushdown: {'OK' if ok23 else 'PLAN REGRESSION'}")
+    failures += not ok23
+
     sys.exit(1 if failures else 0)
 
 
